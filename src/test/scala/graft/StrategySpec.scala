@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.ta.{registry, IndicatorSpec, Strategy}
@@ -11,6 +12,110 @@ class StrategySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def bars = Graft.bars(spark, TestSpark.sfDir)
+
+  /** Awkward inputs derived from the bars fixture, one pathology per
+    * series: the plain fixture, a one-row series, nulls, zeros (flat
+    * range, zero volume), NaN, ±∞, magnitudes near 1e300 and duplicate
+    * `ts`. Duplicates are exact copies of whole rows, so every route's
+    * result is determined as a multiset of rows even though the order
+    * of the tied rows is not. */
+  private def awkward: DataFrame = {
+    val b = bars
+    val day = dayofyear(col("ts"))
+    def on(k: Int, r: Int)(c: String, v: org.apache.spark.sql.Column) =
+      when(day % k === r, v).otherwise(col(c))
+    val px = Seq("open", "high", "low", "close")
+    def series(name: String, d: DataFrame) = d.withColumn("series_id", lit(name))
+    val nul = lit(null).cast("double")
+    Seq(
+      b,
+      series("one", b.orderBy("ts").limit(1)),
+      series("nulls", b.withColumn("close", on(5, 2)("close", nul))
+        .withColumn("high", on(7, 3)("high", nul)).withColumn("volume", on(6, 1)("volume", nul))
+        .withColumn("open", on(9, 4)("open", nul))),
+      series("zeros", b.withColumn("close", on(5, 1)("close", lit(0.0)))
+        .withColumn("high", on(4, 2)("high", col("low"))).withColumn("volume", on(3, 0)("volume", lit(0.0)))),
+      series("nan", b.withColumn("close", on(6, 3)("close", lit(Double.NaN)))
+        .withColumn("low", on(8, 5)("low", lit(Double.NaN)))),
+      series("inf", b.withColumn("close", on(7, 2)("close", lit(Double.PositiveInfinity)))
+        .withColumn("high", on(9, 6)("high", lit(Double.PositiveInfinity)))
+        .withColumn("low", on(10, 1)("low", lit(Double.NegativeInfinity)))),
+      series("huge", px.foldLeft(b)((d, c) => d.withColumn(c, col(c) * 1e300))),
+      series("dups", b.unionByName(b.where(day % 4 === 0)))
+    ).reduce(_ unionByName _)
+  }
+
+  private def emptyBars: DataFrame = bars.where(lit(false))
+
+  private type Outcome = Either[String, (Seq[String], Map[Row, Int])]
+
+  /** A route's result: its columns in name order and its rows as a
+    * multiset (exact Row equality: NaN equals NaN, -0.0 does not equal
+    * 0.0), or the error it raised. */
+  private def outcome(df: => DataFrame): Outcome =
+    scala.util.Try {
+      val d = df
+      val cols = d.columns.sorted.toSeq
+      cols -> d.select(cols.map(c => col(s"`$c`")): _*).collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+    }.toEither.left.map(e => s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+
+  /** None when both outcomes agree: same columns and rows, or the same error. */
+  private def difference(a: Outcome, b: Outcome): Option[String] = (a, b) match {
+    case _ if a == b => None
+    case (Right((ca, _)), Right((cb, _))) if ca != cb => Some(s"columns $ca vs $cb")
+    case (Right((_, ra)), Right((_, rb))) =>
+      Some(s"rows ${(ra.keySet diff rb.keySet).take(2)} vs ${(rb.keySet diff ra.keySet).take(2)}")
+    case _ => Some(s"$a vs $b".take(600))
+  }
+
+  /** The `df.ta` accessor call for every registry kind, at its defaults. */
+  private val accessor: Map[String, DataFrame => DataFrame] = Map(
+    "sma" -> (_.ta.sma()), "ema" -> (_.ta.ema()), "wma" -> (_.ta.wma()), "rma" -> (_.ta.rma()),
+    "dema" -> (_.ta.dema()), "tema" -> (_.ta.tema()), "trima" -> (_.ta.trima()), "hma" -> (_.ta.hma()),
+    "zlma" -> (_.ta.zlma()), "alma" -> (_.ta.alma()), "fwma" -> (_.ta.fwma()), "pwma" -> (_.ta.pwma()),
+    "swma" -> (_.ta.swma()), "sinwma" -> (_.ta.sinwma()), "t3" -> (_.ta.t3()), "kama" -> (_.ta.kama()),
+    "vidya" -> (_.ta.vidya()), "mcgd" -> (_.ta.mcgd()), "ssf" -> (_.ta.ssf()), "hwma" -> (_.ta.hwma()),
+    "jma" -> (_.ta.jma()), "hilo" -> (_.ta.hilo()), "supertrend" -> (_.ta.supertrend()),
+    "ichimoku" -> (_.ta.ichimoku()), "midpoint" -> (_.ta.midpoint()), "midprice" -> (_.ta.midprice()),
+    "hl2" -> (_.ta.hl2), "hlc3" -> (_.ta.hlc3), "ohlc4" -> (_.ta.ohlc4), "wcp" -> (_.ta.wcp),
+    "vwap" -> (_.ta.vwap), "vwma" -> (_.ta.vwma()), "linreg" -> (_.ta.linreg()),
+    "rsi" -> (_.ta.rsi()), "macd" -> (_.ta.macd()), "mom" -> (_.ta.mom()), "roc" -> (_.ta.roc()),
+    "stoch" -> (_.ta.stoch()), "stochrsi" -> (_.ta.stochrsi()), "willr" -> (_.ta.willr()),
+    "cci" -> (_.ta.cci()), "cmo" -> (_.ta.cmo()), "apo" -> (_.ta.apo()), "ppo" -> (_.ta.ppo()),
+    "pvo" -> (_.ta.pvo()), "ao" -> (_.ta.ao()), "bop" -> (_.ta.bop), "bias" -> (_.ta.bias()),
+    "brar" -> (_.ta.brar()), "cfo" -> (_.ta.cfo()), "cg" -> (_.ta.cg()), "coppock" -> (_.ta.coppock()),
+    "cti" -> (_.ta.cti()), "dm" -> (_.ta.dm()), "er" -> (_.ta.er()), "eri" -> (_.ta.eri()),
+    "fisher" -> (_.ta.fisher()), "inertia" -> (_.ta.inertia()), "kdj" -> (_.ta.kdj()), "kst" -> (_.ta.kst()),
+    "pgo" -> (_.ta.pgo()), "psl" -> (_.ta.psl()), "rvgi" -> (_.ta.rvgi()), "slope" -> (_.ta.slope()),
+    "smi" -> (_.ta.smi()), "squeeze" -> (_.ta.squeeze()), "squeeze_pro" -> (_.ta.squeezePro()),
+    "qqe" -> (_.ta.qqe()), "rsx" -> (_.ta.rsx()), "td_seq" -> (_.ta.tdSeq), "stc" -> (_.ta.stc()),
+    "trix" -> (_.ta.trix()), "tsi" -> (_.ta.tsi()), "uo" -> (_.ta.uo()),
+    "adx" -> (_.ta.adx()), "amat" -> (_.ta.amat()), "aroon" -> (_.ta.aroon()), "chop" -> (_.ta.chop()),
+    "cksp" -> (_.ta.cksp()), "decay" -> (_.ta.decay()), "decreasing" -> (_.ta.decreasing()),
+    "increasing" -> (_.ta.increasing()), "dpo" -> (_.ta.dpo()), "psar" -> (_.ta.psar()),
+    "qstick" -> (_.ta.qstick()), "ttm_trend" -> (_.ta.ttmTrend()), "vhf" -> (_.ta.vhf()),
+    "vortex" -> (_.ta.vortex()),
+    "aberration" -> (_.ta.aberration()), "accbands" -> (_.ta.accbands()), "atr" -> (_.ta.atr()),
+    "bbands" -> (_.ta.bbands()), "donchian" -> (_.ta.donchian()), "kc" -> (_.ta.kc()),
+    "massi" -> (_.ta.massi()), "natr" -> (_.ta.natr()), "pdist" -> (_.ta.pdist()), "rvi" -> (_.ta.rvi()),
+    "thermo" -> (_.ta.thermo()), "hwc" -> (_.ta.hwc()), "true_range" -> (_.ta.trueRange), "ui" -> (_.ta.ui()),
+    "ad" -> (_.ta.ad), "adosc" -> (_.ta.adosc()), "aobv" -> (_.ta.aobv()), "cmf" -> (_.ta.cmf()),
+    "efi" -> (_.ta.efi()), "eom" -> (_.ta.eom()), "kvo" -> (_.ta.kvo()), "mfi" -> (_.ta.mfi()),
+    "nvi" -> (_.ta.nvi()), "pvi" -> (_.ta.pvi()), "obv" -> (_.ta.obv), "pvol" -> (_.ta.pvol),
+    "pvr" -> (_.ta.pvr), "pvt" -> (_.ta.pvt),
+    "kalman" -> (_.ta.kalman()), "cusum" -> (_.ta.cusum()), "entropy" -> (_.ta.entropy()),
+    "kurtosis" -> (_.ta.kurtosis()), "mad" -> (_.ta.mad()), "median" -> (_.ta.median()),
+    "quantile" -> (_.ta.quantile()), "skew" -> (_.ta.skew()), "stdev" -> (_.ta.stdev()),
+    "variance" -> (_.ta.variance()), "zscore" -> (_.ta.zscore()), "tos_stdevall" -> (_.ta.tosStdevall()),
+    "log_return" -> (_.ta.logReturn()), "percent_return" -> (_.ta.percentReturn()),
+    "drawdown" -> (_.ta.drawdown),
+    "ha" -> (_.ta.ha), "cdl_doji" -> (_.ta.cdlDoji()), "cdl_inside" -> (_.ta.cdlInside),
+    "cdl_pattern" -> (_.ta.cdlPatterns), "cdl_pattern_2" -> (_.ta.cdlPatterns2),
+    "cdl_pattern_3" -> (_.ta.cdlPatterns3), "cdl_pattern_4" -> (_.ta.cdlPatterns4),
+    "cdl_pattern_5" -> (_.ta.cdlPatterns5), "cdl_pattern_6" -> (_.ta.cdlPatterns6),
+    "candle_utils" -> (_.ta.candleUtils), "geometric_mean" -> (_.ta.geometricMean()),
+    "ebsw" -> (_.ta.ebsw()), "cdl_z" -> (_.ta.cdlZ())
+  )
 
   test("registry lists categories and indicators") {
     assert(registry.categories == Seq("candles", "cycles", "momentum", "overlap", "performance", "statistics", "trend", "volatility", "volume"))
@@ -36,56 +141,75 @@ class StrategySpec extends AnyFunSuite {
   }
 
   test("compiled lowering equals the builder for every lowerable kind") {
+    // three routes per kind — the accessor, registry(df, spec) and a
+    // one-spec Strategy batch — on the fixture, the awkward frame and an
+    // empty frame
+    assert(accessor.keySet == registry.indicators.toSet, "accessor table out of step with the registry")
     val lowered = registry.indicators.map(IndicatorSpec(_)).filter(registry.hasLowering)
     assert(lowered.size >= 70, s"only ${lowered.size} kinds have lowerings")
-    lowered.foreach { spec =>
-      val viaStrategy = registry.strategy(bars, Strategy("one", Seq(spec)))
-      val viaBuilder = registry(bars, spec)
-      assert(
-        viaStrategy.columns.sorted.sameElements(viaBuilder.columns.sorted),
-        s"${spec.kind}: columns ${viaStrategy.columns.sorted.toSeq} vs ${viaBuilder.columns.sorted.toSeq}"
+    // the awkward frame carries the plain fixture as its "ALL" series
+    val frames = Seq("awkward" -> awkward.cache(), "empty" -> emptyBars)
+    val failures = for {
+      kind <- registry.indicators
+      (fname, df) <- frames
+      spec = IndicatorSpec(kind)
+      viaAccessor = outcome(accessor(kind)(df))
+      (route, out) <- Seq(
+        "registry" -> outcome(registry(df, spec)),
+        "batch" -> outcome(registry.strategy(df, Strategy("one", Seq(spec))))
       )
-      val cols = viaBuilder.columns.sorted.toSeq
-      val a = viaStrategy.select(cols.map(col): _*).orderBy("ts").collect()
-      val b = viaBuilder.select(cols.map(col): _*).orderBy("ts").collect()
-      assert(a.sameElements(b), s"${spec.kind}: values differ")
-    }
+      d <- difference(out, viaAccessor)
+    } yield s"$kind on $fname: $route vs accessor: $d"
+    // rec.Jma reads close with getDouble, so a null close fails the job
+    // on every route alike; every other kind must produce rows
+    val errors = for {
+      kind <- registry.indicators if kind != "jma"
+      (fname, df) <- frames
+      e <- outcome(accessor(kind)(df)).left.toOption
+    } yield s"$kind on $fname: $e"
+    assert(failures.isEmpty && errors.isEmpty, (failures ++ errors).mkString("\n"))
+  }
+
+  /** A Strategy batch must equal folding `registry(df, spec)` over its
+    * specs; returns the disagreements. */
+  private def batchVsFold(name: String, specs: Seq[IndicatorSpec]): Seq[String] =
+    for {
+      (fname, df) <- Seq("bars" -> bars, "awkward" -> awkward)
+      batch = outcome(registry.strategy(df, Strategy(name, specs)))
+      d <- batch.left.toOption.orElse(difference(batch, outcome(specs.foldLeft(df)((d, s) => registry(d, s)))))
+    } yield s"$name ${specs.map(s => s.kind + s.params).mkString(" then ")} on $fname: $d"
+
+  private def assertBatchIsFold(name: String, specs: Seq[IndicatorSpec]*): Unit = {
+    val failures = specs.flatMap(batchVsFold(name, _))
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("same-kind different-param specs equal the builder fold") {
-    // eri/cci/kc lowerings use param-independent temp names (__eri_e,
-    // __cci_mad, ...) — batching two variants of one kind must not compute
-    // the first spec's outputs from the second spec's intermediates
-    val specs = Seq(
+    // batching two variants of one kind must not compute the first spec's
+    // outputs from the second spec's intermediates
+    assertBatchIsFold("dup", Seq(
       IndicatorSpec("eri", Map("length" -> 10)),
       IndicatorSpec("eri", Map("length" -> 20)),
       IndicatorSpec("cci", Map("length" -> 10)),
       IndicatorSpec("cci", Map("length" -> 14)),
       IndicatorSpec("kc", Map("length" -> 20)),
       IndicatorSpec("kc", Map("length" -> 10))
-    )
-    val viaStrategy = registry.strategy(bars, Strategy("dup", specs))
-    val viaFold = specs.foldLeft(bars)((d, s) => registry(d, s))
-    assert(viaStrategy.columns.sorted.sameElements(viaFold.columns.sorted))
-    val cols = viaFold.columns.sorted.toSeq
-    val a = viaStrategy.select(cols.map(col): _*).orderBy("ts").collect()
-    val b = viaFold.select(cols.map(col): _*).orderBy("ts").collect()
-    assert(a.sameElements(b), "same-kind batch diverged from the builder fold")
+    ))
   }
 
   test("colliding output names keep last-wins fold order") {
     // macd emits param-independent output names; the LAST spec's params
     // must win, exactly as folding apply would
-    val specs = Seq(
-      IndicatorSpec("macd", Map("fast" -> 12, "slow" -> 26)),
-      IndicatorSpec("macd", Map("fast" -> 5, "slow" -> 35))
+    assertBatchIsFold(
+      "collide",
+      Seq(IndicatorSpec("macd", Map("fast" -> 12, "slow" -> 26)), IndicatorSpec("macd", Map("fast" -> 5, "slow" -> 35))),
+      // adx writes dmp_14/dmn_14 one level deeper than dm does
+      Seq(IndicatorSpec("adx", Map("length" -> 14)), IndicatorSpec("dm", Map("length" -> 14))),
+      Seq(IndicatorSpec("dm", Map("length" -> 14)), IndicatorSpec("adx", Map("length" -> 14))),
+      // kernel outputs: same names, different parameters
+      Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0))),
+      Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
     )
-    val viaStrategy = registry.strategy(bars, Strategy("mm", specs))
-    val viaFold = specs.foldLeft(bars)((d, s) => registry(d, s))
-    val cols = viaFold.columns.sorted.toSeq
-    val a = viaStrategy.select(cols.map(col): _*).orderBy("ts").collect()
-    val b = viaFold.select(cols.map(col): _*).orderBy("ts").collect()
-    assert(a.sameElements(b), "output-name collision diverged from fold order")
   }
 
   test("reserved __ prefix on input columns is rejected") {
