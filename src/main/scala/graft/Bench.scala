@@ -556,7 +556,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUPS", "2").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_out.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val suite = sys.env.get("SPARK_GRAFT_SUITE").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // ADVICE r13: a typo'd suite name must not silently shrink the run —
     // warn, stamp the artifact, and size the baseline minimum from the
@@ -714,7 +714,7 @@ object Bench {
     * as a shard / fresh probe / local iteration. */
   private def singleRun(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUPS", "2").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_out.json")

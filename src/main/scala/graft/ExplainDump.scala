@@ -22,7 +22,7 @@ object ExplainDump {
       else SparkEntry.queries.keys.toSeq.sorted
     val noopReps = if (args.length > 3) args(3).toInt else 0
     Files.createDirectories(outDir)
-    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     // session warm-up mirrors Bench so isolated timings are comparable
     try {

@@ -61,8 +61,11 @@ object Graft {
         spark.experimental.extraOptimizations :+ plans.ApproxDistinctRewrite
   }
 
+  /** Cores the mains run on: `SPARK_GRAFT_CPUS`, else the host's. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   /** Standalone session for mains (Verify/Bench build their own). */
-  def session(cores: String = "32", shufflePartitions: String = "32"): SparkSession = {
+  def session(cores: String = cpus, shufflePartitions: String = cpus): SparkSession = {
     val s = SparkSession
       .builder()
       .master(s"local[$cores]")

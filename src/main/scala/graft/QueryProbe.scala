@@ -22,7 +22,7 @@ object QueryProbe {
       if (args.length > 1 && args(1).nonEmpty) args(1).split(",").map(_.trim).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()

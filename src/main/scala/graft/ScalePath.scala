@@ -65,7 +65,7 @@ object ScalePath {
     val Array(dir, factorS, outPath, mode) = args.take(4)
     val factor = factorS.toInt
     require(mode == "cand" || mode == "pairs", s"unknown mode $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -52,7 +52,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, fStr) = args.take(3)
     val factor = fStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -9,7 +9,7 @@ object Verify {
     // (local iteration; the driver always passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] = if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Graft.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -122,7 +122,7 @@ object TaSqlSurface2 {
     )
   }
 
-  /** stage.linreg's closed form: (slope, intercept, tsf, r). */
+  /** StrategyCompiler.linregLv's closed form: (slope, intercept, tsf, r). */
   private def linregParts(x0: Column, n: Int): (Column, Column, Column, Column) = {
     val nn = n.toDouble
     val sx = (0 until n).map(_.toDouble).sum

@@ -73,7 +73,7 @@ object sqlgen {
     wdot(x, ws.reverse.map(_ / denom))
   }
 
-  /** Rolling-OLS closed form vs x = 0..n−1 — mirror of stage.linreg.
+  /** Rolling-OLS closed form vs x = 0..n−1 — mirror of StrategyCompiler.linregLv.
     * Emits SELECT-fragment columns <p>_slope, <p>_intercept, <p>_tsf, <p>_r
     * given staged sxy/sy/syy columns (see linregStage). */
   def linregStage(x: String, n: Int): String = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Graft
 import graft.ta.{prim => P}
 import graft.ta.stage
+import graft.ta.Ta._
 import sqlgen._
 
 /** Close-only indicators over the per-user value series
@@ -226,8 +227,8 @@ object SeriesQueries {
       Seq("mad_10", "skew_10", "kurt_10", "entropy_10"),
       fin(b, Seq("mad_10", "skew_10", "kurt_10", "entropy_10"))
     ) { df0 =>
-      stage
-        .mad(df0, "close", "mad_10", 10)
+      df0.ta
+        .mad(10)
         .withColumn("skew_10", P.rskew(col("close"), 10))
         .withColumn("kurt_10", P.rkurt(col("close"), 10))
         .withColumn("rs10", P.rsum(col("close"), 10))

@@ -386,14 +386,6 @@ object StreamingTa {
     }
   }
 
-  /** cusum staging (fixed-reference mode only — the causal form): the
-    * trained μ/σ ride along as constants, exactly the literals the batch
-    * compileRec lowering stages. */
-  final class CusumStage(mu: Double, sd: Double) extends StreamStage {
-    val fields = Seq(dblField("__mu"), dblField("__sd"))
-    def update(t: BarTick): Array[Any] = Array(Double.box(mu), Double.box(sd))
-  }
-
   /** qqe staging: the full batch chain — Wilder-rma rsi of close moves →
     * sma-seeded ema(smooth) of rsi (__rsima) → double Wilder-ewm of
     * |Δrsima| × factor (__dar). Mirrors compileRec's levels gate-for-gate. */
@@ -1422,7 +1414,7 @@ object StreamingTa {
             Array(if (v == null) null else jD(-v.doubleValue()))
           }
         case "cfo" | "cti" =>
-          // stage.linreg closed form over the close ring
+          // StrategyCompiler.linregLv closed form over the close ring
           if (!rc.gated(n)) Array(null)
           else {
             val nn = n.toDouble
@@ -1769,7 +1761,7 @@ object StreamingTa {
     private val adRing2 = new NRing(math.max(n, 2) + 1)
   }
 
-  /** linreg TSF endpoint over an NRing's last n values (stage.linreg's
+  /** linreg TSF endpoint over an NRing's last n values (StrategyCompiler.linregLv's
     * closed form; gate = n non-null among the last n). */
   private def linregTsf(r: NRing, n: Int): java.lang.Double = {
     if (!r.gated(n)) return null
@@ -2301,7 +2293,7 @@ object StreamingTa {
     * and the Wilder composites (atr/natr/trix/tsi/adx/stoch/bbands/kc,
     * round 10) — batch parity spec-asserted; compose with [[recStream]]
     * specs in one [[kernelBatchStream]] pass. Defaults mirror the
-    * registry builders. */
+    * StrategyCompiler lowerings. */
   def windowStream(spec: graft.ta.IndicatorSpec): Option[StreamKernel] = {
     def ip(k: String, dflt: Int) = spec.params.get(k).map(_.toString.toDouble.toInt).getOrElse(dflt)
     def dp(k: String, dflt: Double) = spec.params.get(k).map(_.toString.toDouble).getOrElse(dflt)
@@ -2343,7 +2335,7 @@ object StreamingTa {
     } else if (comp2StreamKinds(spec.kind)) {
       wrap(() => new Comp2Stage(spec.kind, spec.params))
     } else if (wilderStreamKinds(spec.kind)) {
-      // defaults mirror the registry builders (Strategy.scala)
+      // defaults mirror the StrategyCompiler lowerings
       val st: () => StreamStage = spec.kind match {
         case "atr" => () => new AtrStage(ip("length", 10))
         case "natr" => () => new NatrStage(ip("length", 10))
@@ -2397,7 +2389,6 @@ object StreamingTa {
         case "td_seq" => () => new TdSeqStage
         case "hilo"   => () => new HiloStage(i("high_length", 13), i("low_length", 21))
         case "qqe"    => () => new QqeStage(i("length", 14), i("smooth", 5), dd("factor", 4.236))
-        case "cusum"  => () => new CusumStage(dd("mu", 0.0), dd("sd", 1.0))
         case _        => () => NoStage
       }
       StreamKernel(outs, make, stage)

@@ -624,9 +624,10 @@ object rec {
   }
 
   /** Two-sided CUSUM changepoint detector (Page 1954) over the
-    * standardized series. Consumes pre-computed per-series `__mu`/`__sd`
-    * columns (rounded to 6 dp so the oracle recursion folds from
-    * bit-identical inputs); state:
+    * standardized series. The reference (μ, σ) is either the literal
+    * `ref` or the pre-computed per-series `__mu`/`__sd` columns (rounded
+    * to 6 dp so the oracle recursion folds from bit-identical inputs);
+    * state:
     *
     *   sp = max(0, sp' + (x − μ)/σ − k)    // upward drift statistic
     *   sn = max(0, sn' + (μ − x)/σ − k)    // downward drift statistic
@@ -636,18 +637,24 @@ object rec {
     * value. Null x or σ∈{null,0} → null outputs, state unchanged. Not a
     * pandas-ta indicator — pipeline drift/changepoint monitoring (the
     * same recursion a data-quality monitor runs per feed). */
-  final class Cusum(k: Double = 0.5, h: Double = 5.0, src: String = "close") extends Kernel {
+  final class Cusum(
+      k: Double = 0.5,
+      h: Double = 5.0,
+      src: String = "close",
+      ref: Option[(Double, Double)] = None
+  ) extends Kernel {
     private var iX, iMu, iSd = 0
     private var sp, sn = 0.0
     def init(schema: StructType): Unit = {
       iX = schema.fieldIndex(src)
-      iMu = schema.fieldIndex("__mu"); iSd = schema.fieldIndex("__sd")
+      if (ref.isEmpty) { iMu = schema.fieldIndex("__mu"); iSd = schema.fieldIndex("__sd") }
     }
     def reset(): Unit = { sp = 0.0; sn = 0.0 }
     def update(row: Row): Array[Any] = {
-      if (isN(row, iX) || isN(row, iMu) || isN(row, iSd) || d(row, iSd) == 0.0)
-        return Array(null, null, null)
-      val z = (d(row, iX) - d(row, iMu)) / d(row, iSd)
+      if (isN(row, iX) || ref.isEmpty && (isN(row, iMu) || isN(row, iSd))) return Array(null, null, null)
+      val (mu, sd) = ref.getOrElse((d(row, iMu), d(row, iSd)))
+      if (sd == 0.0) return Array(null, null, null)
+      val z = (d(row, iX) - mu) / sd
       sp = math.max(0.0, sp + z - k)
       sn = math.max(0.0, sn - z - k)
       val alarm = sp > h || sn > h

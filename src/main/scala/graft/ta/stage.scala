@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import prim._
 
-/** Staged (multi-withColumn) indicator builders. Window expressions can't
-  * nest inside one projection, so recursive indicators stack projections;
-  * every stage uses the SAME (series_id, ts) window spec, so Catalyst
-  * plans them as consecutive WindowExecs over ONE Exchange + Sort.
+/** Staged (multi-withColumn) ema/rma builders for callers outside the
+  * registry (oracle mirrors, Halo, scale probes). Window expressions
+  * can't nest inside one projection, so recursive indicators stack
+  * projections; every stage uses the SAME (series_id, ts) window spec, so
+  * Catalyst plans them as consecutive WindowExecs over ONE Exchange + Sort.
   */
 object stage {
 
@@ -56,55 +57,7 @@ object stage {
       .drop(rnc, sd, z)
   }
 
-  /** Unseeded ewm(span=n, adjust=False) — macd/tsi building block. */
-  def ewmSpan(df: DataFrame, src: String, out: String, n: Int): DataFrame =
-    df.withColumn(out, ewm(col(src), 2.0 / (n + 1)))
-
   /** Wilder rma(src, n): ewm(alpha=1/n) masked until n observations. */
   def rma(df: DataFrame, src: String, out: String, n: Int): DataFrame =
     df.withColumn(out, rmaOf(col(src), n))
-
-  /** Rolling mean absolute deviation (stages collect_list + mean so the
-    * HOF lambda only references materialized attributes). */
-  def mad(df: DataFrame, src: String, out: String, n: Int): DataFrame = {
-    val xs = s"__${out}_xs"
-    val m = s"__${out}_m"
-    df.withColumn(xs, collect_list(col(src)).over(f(n)))
-      .withColumn(m, avg(col(src)).over(f(n)))
-      .withColumn(
-        out,
-        when(
-          count(col(src)).over(f(n)) >= n,
-          aggregate(col(xs), lit(0.0), (acc, v) => acc + abs(v - col(m))) / size(col(xs))
-        )
-      )
-      .drop(xs, m)
-  }
-
-  /** Rolling OLS of src against x = 0..n-1 (oldest..newest), closed form.
-    * Emits slope, intercept, tsf (endpoint a+b(n-1)) and r. */
-  def linreg(df: DataFrame, src: String, prefix: String, n: Int): DataFrame = {
-    val nn = n.toDouble
-    val sx = (0 until n).map(_.toDouble).sum
-    val sxx = (0 until n).map(i => i.toDouble * i).sum
-    val dx = nn * sxx - sx * sx
-    // Σ x_i·y_i with x oldest..newest ⇒ lag j (newest j=0) weight (n-1-j).
-    val sxy = wdot(col(src), (0 until n).map(j => (n - 1 - j).toDouble))
-    val sy = sum(col(src)).over(f(n))
-    val syy = sum(col(src) * col(src)).over(f(n))
-    val g = count(col(src)).over(f(n)) >= n
-    df.withColumn(s"__sxy", when(g, sxy))
-      .withColumn(s"__sy", when(g, sy))
-      .withColumn(s"__syy", when(g, syy))
-      .withColumn(s"${prefix}_slope", (lit(nn) * col("__sxy") - lit(sx) * col("__sy")) / lit(dx))
-      .withColumn(s"${prefix}_intercept", (col("__sy") - col(s"${prefix}_slope") * lit(sx)) / lit(nn))
-      .withColumn(s"${prefix}_tsf", col(s"${prefix}_intercept") + col(s"${prefix}_slope") * lit(nn - 1.0))
-      .withColumn(
-        s"${prefix}_r", {
-          val den2 = (lit(nn) * col("__syy") - col("__sy") * col("__sy")) * lit(dx)
-          sdiv(lit(nn) * col("__sxy") - lit(sx) * col("__sy"), when(den2 > 0.0, sqrt(den2)))
-        }
-      )
-      .drop("__sxy", "__sy", "__syy")
-  }
 }

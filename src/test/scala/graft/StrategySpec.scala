@@ -140,41 +140,105 @@ class StrategySpec extends AnyFunSuite {
     assert(exchanges.size <= 2, s"window strategy added shuffles: ${exchanges.size}")
   }
 
+  /** Non-default accessor calls and the registry spec with the same
+    * parameters — every key the accessor takes reaches the lowering. */
+  private val variants: Seq[(IndicatorSpec, DataFrame => DataFrame)] = Seq(
+    IndicatorSpec("sma", Map("length" -> 7, "close" -> "open")) -> (_.ta.sma(7, "open")),
+    IndicatorSpec("macd", Map("fast" -> 5, "slow" -> 13, "signal" -> 4, "close" -> "high")) -> (_.ta.macd(5, 13, 4, "high")),
+    IndicatorSpec("stochrsi", Map("length" -> 8, "k" -> 5, "d" -> 2)) -> (_.ta.stochrsi(8, 5, 2)),
+    IndicatorSpec("kst", Map("roc" -> Seq(3, 5, 7, 9), "sma" -> Seq(2, 2, 3, 3), "signal" -> 4)) ->
+      (_.ta.kst(Seq(3, 5, 7, 9), Seq(2, 2, 3, 3), 4)),
+    IndicatorSpec("slope", Map("length" -> 3, "as_angle" -> true)) -> (_.ta.slope(3, asAngle = true)),
+    IndicatorSpec("dpo", Map("length" -> 6, "centered" -> false)) -> (_.ta.dpo(6, centered = false)),
+    IndicatorSpec("pdist", Map("drift" -> 2)) -> (_.ta.pdist(2)),
+    IndicatorSpec("eom", Map("length" -> 5, "divisor" -> 1e4)) -> (_.ta.eom(5, 1e4)),
+    IndicatorSpec("nvi", Map("initial" -> 100.0)) -> (_.ta.nvi(100.0)),
+    IndicatorSpec("pvi", Map("initial" -> 100.0)) -> (_.ta.pvi(100.0)),
+    IndicatorSpec("entropy", Map("length" -> 5, "base" -> 10.0)) -> (_.ta.entropy(5, 10.0)),
+    IndicatorSpec("tos_stdevall", Map("stds" -> Seq(1, 4))) -> (_.ta.tosStdevall(Seq(1, 4))),
+    IndicatorSpec("amat", Map("fast" -> 5, "slow" -> 9, "lookback" -> 3)) -> (_.ta.amat(5, 9, 3)),
+    IndicatorSpec("aobv", Map("fast" -> 3, "slow" -> 7, "run_length" -> 3)) -> (_.ta.aobv(3, 7, 3)),
+    IndicatorSpec("cci", Map("length" -> 6, "scalar" -> 0.02)) -> (_.ta.cci(6, 0.02)),
+    IndicatorSpec("hwc", Map("na" -> 0.3, "nb" -> 0.2, "nc" -> 0.2, "nd" -> 0.3, "k" -> 2.0)) ->
+      (_.ta.hwc(0.3, 0.2, 0.2, 0.3, 2.0)),
+    IndicatorSpec("log_return", Map("cumulative" -> true)) -> (_.ta.logReturn(cumulative = true)),
+    IndicatorSpec("percent_return", Map("length" -> 2, "cumulative" -> true, "close" -> "low")) ->
+      (_.ta.percentReturn(2, cumulative = true, "low")),
+    IndicatorSpec("cusum", Map("k" -> 0.3, "h" -> 2.0, "mu" -> 40.0, "sd" -> 30.0)) ->
+      (_.ta.cusum(0.3, 2.0, mu = Some(40.0), sd = Some(30.0))),
+    IndicatorSpec("cusum", Map("k" -> 0.3, "close" -> "high")) -> (_.ta.cusum(0.3, src = "high")),
+    IndicatorSpec("jma", Map("length" -> 9, "phase" -> 50.0)) -> (_.ta.jma(9, 50.0))
+  )
+
   test("compiled lowering equals the builder for every lowerable kind") {
     // three routes per kind — the accessor, registry(df, spec) and a
-    // one-spec Strategy batch — on the fixture, the awkward frame and an
-    // empty frame
+    // one-spec Strategy batch — on the awkward frame (it carries the plain
+    // fixture as its "ALL" series) and an empty frame
     assert(accessor.keySet == registry.indicators.toSet, "accessor table out of step with the registry")
     val lowered = registry.indicators.map(IndicatorSpec(_)).filter(registry.hasLowering)
     assert(lowered.size >= 70, s"only ${lowered.size} kinds have lowerings")
-    // the awkward frame carries the plain fixture as its "ALL" series
-    val frames = Seq("awkward" -> awkward.cache(), "empty" -> emptyBars)
-    val failures = for {
-      kind <- registry.indicators
+    val aw = awkward.cache()
+    val frames = Seq("awkward" -> aw, "empty" -> emptyBars)
+    val cases = registry.indicators.map(k => IndicatorSpec(k) -> accessor(k)) ++ variants
+    val failures = try for {
+      (spec, viaAccessor) <- cases
       (fname, df) <- frames
-      spec = IndicatorSpec(kind)
-      viaAccessor = outcome(accessor(kind)(df))
-      (route, out) <- Seq(
+      a = outcome(viaAccessor(df))
+      what = s"${spec.kind}${spec.params} on $fname"
+      msg <- a.left.toSeq.collect {
+        // rec.Jma reads close with getDouble: a null close fails the job
+        // on every route alike; every other kind must produce rows
+        case e if spec.kind != "jma" => s"$what: accessor failed: $e"
+      } ++ Seq(
         "registry" -> outcome(registry(df, spec)),
         "batch" -> outcome(registry.strategy(df, Strategy("one", Seq(spec))))
-      )
-      d <- difference(out, viaAccessor)
-    } yield s"$kind on $fname: $route vs accessor: $d"
-    // rec.Jma reads close with getDouble, so a null close fails the job
-    // on every route alike; every other kind must produce rows
-    val errors = for {
-      kind <- registry.indicators if kind != "jma"
-      (fname, df) <- frames
-      e <- outcome(accessor(kind)(df)).left.toOption
-    } yield s"$kind on $fname: $e"
-    assert(failures.isEmpty && errors.isEmpty, (failures ++ errors).mkString("\n"))
+      ).flatMap { case (route, out) => difference(out, a).map(d => s"$what: $route vs accessor: $d") }
+    } yield msg
+    finally aw.unpersist(blocking = true) // CacheRegistrySpec asserts nothing stays pinned
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("temp names carry every parameter their expression reads") {
+    // Varies one parameter at a time from the defaults: a temp name both
+    // specs write must hold the same expression, else a batch of the two
+    // would compute one spec's outputs from the other's intermediates.
+    import graft.ta.StrategyCompiler
+    val alt = Map[String, Any](
+      "length" -> 17, "fast" -> 6, "slow" -> 31, "signal" -> 5, "medium" -> 11, "k" -> 4, "d" -> 5,
+      "smooth_k" -> 4, "std" -> 1.5, "scalar" -> 0.5, "sigma" -> 4.0, "dist_offset" -> 0.5, "a" -> 0.5,
+      "q" -> 5, "r" -> 2.0, "roc" -> Seq(5, 10, 15, 20), "sma" -> Seq(5, 5, 5, 10), "h" -> 2.0, "x" -> 2.0, "p" -> 7,
+      "phase" -> 50.0, "mu" -> 0.5, "sd" -> 2.0, "af0" -> 0.03, "af" -> 0.04, "max_af" -> 0.3,
+      "multiplier" -> 2.0, "tenkan" -> 7, "kijun" -> 22, "senkou" -> 44, "shift" -> 20,
+      "high_length" -> 11, "low_length" -> 19, "smooth" -> 4, "factor" -> 3.0, "na" -> 0.3, "nb" -> 0.2,
+      "nc" -> 0.2, "nd" -> 0.2, "bars" -> 8, "lensig" -> 12, "bb_length" -> 18, "kc_length" -> 16,
+      "mom_length" -> 10, "tclength" -> 8, "rvi_length" -> 12, "swma_length" -> 5, "atr_length" -> 12,
+      "stds" -> Seq(1, 2), "base" -> 10.0, "divisor" -> 1e6, "initial" -> 100.0, "drift" -> 2,
+      "centered" -> false, "as_angle" -> true, "lookback" -> 3, "run_length" -> 3, "cumulative" -> true,
+      "close" -> "open"
+    )
+    // fresh lambda-variable ids differ between two builds of one expression
+    def temps(spec: IndicatorSpec): Map[String, String] =
+      StrategyCompiler.compile(spec).map(cp => (cp.levels, cp.temps))
+        .orElse(StrategyCompiler.compileRec(spec).map(rp => (rp.staging, rp.temps)))
+        .fold(Map.empty[String, String]) { case (levels, ts) =>
+          levels.flatten.collect { case (n, c) if ts.contains(n) => n -> c.toString.replaceAll("\\b([xy])_\\d+\\b", "$1") }.toMap
+        }
+    val base = Map[String, Any]("mu" -> 0.0, "sd" -> 1.0) // cusum lowers only with a reference
+    val clashes = for {
+      kind <- registry.indicators
+      a = temps(IndicatorSpec(kind, base))
+      key <- alt.keys.toSeq.sorted
+      (n, e) <- temps(IndicatorSpec(kind, base + (key -> alt(key))))
+      if a.get(n).exists(_ != e)
+    } yield s"$kind: $key changes the expression of $n"
+    assert(clashes.isEmpty, clashes.mkString("\n"))
   }
 
   /** A Strategy batch must equal folding `registry(df, spec)` over its
     * specs; returns the disagreements. */
-  private def batchVsFold(name: String, specs: Seq[IndicatorSpec]): Seq[String] =
+  private def batchVsFold(name: String, specs: Seq[IndicatorSpec], awkwardToo: Boolean = true): Seq[String] =
     for {
-      (fname, df) <- Seq("bars" -> bars, "awkward" -> awkward)
+      (fname, df) <- Seq("bars" -> bars) ++ (if (awkwardToo) Seq("awkward" -> awkward) else Nil)
       batch = outcome(registry.strategy(df, Strategy(name, specs)))
       d <- batch.left.toOption.orElse(difference(batch, outcome(specs.foldLeft(df)((d, s) => registry(d, s)))))
     } yield s"$name ${specs.map(s => s.kind + s.params).mkString(" then ")} on $fname: $d"
@@ -207,9 +271,19 @@ class StrategySpec extends AnyFunSuite {
       Seq(IndicatorSpec("adx", Map("length" -> 14)), IndicatorSpec("dm", Map("length" -> 14))),
       Seq(IndicatorSpec("dm", Map("length" -> 14)), IndicatorSpec("adx", Map("length" -> 14))),
       // kernel outputs: same names, different parameters
-      Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0))),
-      Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
+      Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0)))
     )
+    // rec.Jma fails on the awkward frame's null closes whatever the route
+    val jma = Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
+    val failures = batchVsFold("collide", jma, awkwardToo = false)
+    assert(failures.isEmpty, failures.mkString("\n"))
+    // adx and dm agree on dmp/dmn, so the rule itself on two plans that
+    // write one name with different values at different depths
+    import graft.ta.StrategyCompiler.{runAll, ColPlan}
+    val deep = ColPlan(Seq(Seq("__d" -> lit(0.0)), Seq("x" -> (col("__d") + 1.0))), Seq("__d"))
+    val shallow = ColPlan(Seq(Seq("x" -> lit(2.0))), Nil)
+    def x(plans: ColPlan*) = runAll(bars, plans, Nil).select("x").distinct().collect().map(_.getDouble(0)).toSeq
+    assert(x(deep, shallow) == Seq(2.0) && x(shallow, deep) == Seq(1.0), "last plan must win whatever its depth")
   }
 
   test("reserved __ prefix on input columns is rejected") {
