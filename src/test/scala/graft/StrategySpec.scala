@@ -170,16 +170,84 @@ class StrategySpec extends AnyFunSuite {
     IndicatorSpec("jma", Map("length" -> 9, "phase" -> 50.0)) -> (_.ta.jma(9, 50.0))
   )
 
+  /** Series the stream route skips: a stream drops a tick whose `ts` is not
+    * after the series' last one ("dups"), and a `BarTick` carries its
+    * prices as primitive doubles, so no stream can deliver a null ("nulls"). */
+  private val notStreamed = Set("dups", "nulls")
+
+  private val barTickSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "series_id STRING, ts BIGINT, open DOUBLE, high DOUBLE, low DOUBLE, close DOUBLE, volume DOUBLE")
+
+  /** The stream route: every tick of a series folded in `ts` order through
+    * the stage and kernel `windowStream`/`recStream` build, as
+    * kernelBatchStream does; rows as (series_id, ts, outputs in name order). */
+  private def streamRows(sk: graft.streaming.StreamingTa.StreamKernel, df: DataFrame): (Seq[String], Seq[Row]) = {
+    import graft.streaming.StreamingTa.BarTick
+    import org.apache.spark.sql.types.StructType
+    val ticks = df.where(!col("series_id").isin(notStreamed.toSeq: _*))
+      .select(col("series_id").cast("string"), unix_date(col("ts")).cast("long"),
+        col("open"), col("high"), col("low"), col("close"), col("volume"))
+      .collect().map(r => BarTick(r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4), r.getDouble(5), r.getDouble(6)))
+    val names = sk.outs.map(_.name)
+    val order = names.zipWithIndex.sortBy(_._1).map(_._2)
+    val rows = ticks.groupBy(_.series_id).values.toSeq.flatMap { ts0 =>
+      val stg = sk.stage()
+      val es = StructType(barTickSchema.fields ++ stg.fields)
+      val kern = sk.make(); kern.init(es); kern.reset()
+      ts0.sortBy(_.ts).map { t =>
+        val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
+        val vals = kern.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(base ++ stg.update(t), es))
+        Row.fromSeq(Seq(t.series_id, t.ts) ++ order.map(vals(_)))
+      }
+    }
+    (names.sorted, rows)
+  }
+
+  /** The stream route against the accessor's outcome: the same added
+    * columns, and per streamed series the same rows; returns the
+    * disagreements, naming the series (one pathology each). */
+  private def streamDifference(sk: graft.streaming.StreamingTa.StreamKernel, df: DataFrame, acc: Outcome): Seq[String] =
+    acc.toOption.toSeq.flatMap { case (cols, rows) =>
+      scala.util.Try(streamRows(sk, df)).toEither match {
+        case Left(e) => Seq(s"stream failed: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+        case Right((names, srows)) =>
+          val added = cols.filterNot(df.columns.contains)
+          val colDiff = if (added == names) Nil else Seq(s"stream columns $names vs $added")
+          val common = names.filter(added.contains)
+          val ai = Seq(cols.indexOf("series_id"), cols.indexOf("ts")) ++ common.map(cols.indexOf)
+          val si = Seq(0, 1) ++ common.map(c => 2 + names.indexOf(c))
+          def day(v: Any): Any = v match {
+            case d: java.sql.Date => d.toLocalDate.toEpochDay
+            case d: java.time.LocalDate => d.toEpochDay
+            case other => other
+          }
+          val want = rows.toSeq.flatMap { case (r, k) => Seq.fill(k)(Row.fromSeq(ai.map(i => day(r.get(i))))) }
+            .filterNot(r => notStreamed(r.getString(0)))
+          val got = srows.map(r => Row.fromSeq(si.map(r.get)))
+          def bySeries(rs: Seq[Row]) = rs.groupBy(_.getString(0)).map { case (s, g) => s -> g.groupBy(identity).map { case (r, x) => r -> x.size } }
+          val (w, g) = (bySeries(want), bySeries(got))
+          val bad = (w.keySet ++ g.keySet).toSeq.sorted.filter(s => w.get(s) != g.get(s))
+          colDiff ++ (if (bad.isEmpty) Nil else Seq(s"stream rows differ on series ${bad.mkString(",")}" +
+            bad.headOption.map { s =>
+              val (ws, gs) = (w.getOrElse(s, Map.empty).keySet, g.getOrElse(s, Map.empty).keySet)
+              s" e.g. ${(gs diff ws).toSeq.sortBy(_.getLong(1)).take(1)} vs ${(ws diff gs).toSeq.sortBy(_.getLong(1)).take(1)}"
+            }.getOrElse("")))
+      }
+    }
+
   test("compiled lowering equals the builder for every lowerable kind") {
-    // three routes per kind — the accessor, registry(df, spec) and a
-    // one-spec Strategy batch — on the awkward frame (it carries the plain
-    // fixture as its "ALL" series) and an empty frame
+    // four routes per kind — the accessor, registry(df, spec), a one-spec
+    // Strategy batch and, for every kind windowStream/recStream accepts,
+    // the stream fold — on the awkward frame (it carries the plain fixture
+    // as its "ALL" series) and an empty frame
     assert(accessor.keySet == registry.indicators.toSet, "accessor table out of step with the registry")
     val lowered = registry.indicators.map(IndicatorSpec(_)).filter(registry.hasLowering)
     assert(lowered.size >= 70, s"only ${lowered.size} kinds have lowerings")
     val aw = awkward.cache()
     val frames = Seq("awkward" -> aw, "empty" -> emptyBars)
     val cases = registry.indicators.map(k => IndicatorSpec(k) -> accessor(k)) ++ variants
+    import graft.streaming.StreamingTa
     val failures = try for {
       (spec, viaAccessor) <- cases
       (fname, df) <- frames
@@ -192,7 +260,9 @@ class StrategySpec extends AnyFunSuite {
       } ++ Seq(
         "registry" -> outcome(registry(df, spec)),
         "batch" -> outcome(registry.strategy(df, Strategy("one", Seq(spec))))
-      ).flatMap { case (route, out) => difference(out, a).map(d => s"$what: $route vs accessor: $d") }
+      ).flatMap { case (route, out) => difference(out, a).map(d => s"$what: $route vs accessor: $d") } ++
+        StreamingTa.windowStream(spec).orElse(StreamingTa.recStream(spec)).toSeq
+          .flatMap(streamDifference(_, df, a)).map(d => s"$what: stream vs accessor: $d")
     } yield msg
     finally aw.unpersist(blocking = true) // CacheRegistrySpec asserts nothing stays pinned
     assert(failures.isEmpty, failures.mkString("\n"))
