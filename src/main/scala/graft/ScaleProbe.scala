@@ -91,9 +91,10 @@ object ScaleProbe {
     import graft.ta.Ta.RichTaDf
     def emit(op: String, n: Long, sec: Double): Unit =
       println(s"""{"op":"$op","n":$n,"sec":$sec}""")
-    // optional section filter for quick re-probes: multi|single|pairs|ann
-    val only = sys.env.get("SCALE_PROBE_ONLY")
-    def want(s0: String): Boolean = only.forall(_ == s0)
+    // optional section filter for quick re-probes, a comma list of
+    // sections (multi,single,pairs,ann,streamstrat,...)
+    val only = sys.env.get("SCALE_PROBE_ONLY").map(_.split(',').map(_.trim).toSet)
+    def want(s0: String): Boolean = only.forall(_(s0))
 
     // ---- window / EW / REC over many series (256 series: enough keys to
     // balance the 32 shuffle partitions — 32 keys into 32 buckets loads

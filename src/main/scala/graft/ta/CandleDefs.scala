@@ -4,47 +4,37 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** ALL six candle-pattern waves (the reference candles/cdl_pattern.py
-  * TA-Lib delegation re-expressed as self-contained declared specs),
-  * parameterized over their INPUTS so one definition serves three
-  * consumers that previously could drift:
-  *  - the batch Ta accessors (`cdlPatterns`..`cdlPatterns6`) and the
-  *    StrategyCompiler single-level lowerings — instance [[candleDefs]]
-  *    (inputs = the window primitives shift/rmean);
-  *  - the STREAMING stage (StreamingTa.CandleWaveStage) — an instance over
-  *    a flat lag-column schema (`open_1`..`close_4`, `avg_rng`,
-  *    `avg_body`), whose analyzed expressions are evaluated per tick from
-  *    a ring, so streamed flags are the SAME Catalyst trees batch runs.
+  * TA-Lib delegation re-expressed as self-contained declared specs) over
+  * the window primitives shift/rmean — the single-level StrategyCompiler
+  * lowerings of `cdl_pattern`..`cdl_pattern_6`, which the accessors, the
+  * registry and the streaming stage all run.
   *
   * Conventions: real-body gap = disjoint [min,max](o,c) intervals, doji =
   * body ≤ 0.1·range, Equal tolerance = 0.05·sma(h−l,10). Flags emit
   * 1.0/0.0, null while the needed lags (or the 10-bar averages) are
   * undefined. */
-private[graft] class CandleWaves(
-    cur: String => Column,
-    sh: (String, Int) => Column,
-    avgRngIn: () => Column,
-    avgBodyIn: () => Column
-) {
+private[ta] object candleDefs {
+  import prim.{rmean, shift}
 
-  private val close = cur("close")
-  private val open = cur("open")
-  private val high = cur("high")
-  private val low = cur("low")
+  private val close = col("close")
+  private val open = col("open")
+  private val high = col("high")
+  private val low = col("low")
 
-  private def avgRng = avgRngIn()
+  private def avgRng = rmean(high - low, 10)
   private def nearEq(a: Column, b: Column): Column = abs(a - b) <= lit(0.05) * avgRng
   private val body = abs(close - open)
   private val rng = high - low
   private val upShadow = high - greatest(open, close)
   private val dnShadow = least(open, close) - low
-  private val po = sh("open", 1); private val pc = sh("close", 1)
-  private val ph = sh("high", 1); private val pl = sh("low", 1)
-  private val po2 = sh("open", 2); private val pc2 = sh("close", 2)
-  private val ph2 = sh("high", 2); private val pl2 = sh("low", 2)
-  private val po3 = sh("open", 3); private val pc3 = sh("close", 3)
-  private val ph3 = sh("high", 3); private val pl3 = sh("low", 3)
-  private val po4 = sh("open", 4); private val pc4 = sh("close", 4)
-  private val ph4 = sh("high", 4); private val pl4 = sh("low", 4)
+  private val po = shift(open, 1); private val pc = shift(close, 1)
+  private val ph = shift(high, 1); private val pl = shift(low, 1)
+  private val po2 = shift(open, 2); private val pc2 = shift(close, 2)
+  private val ph2 = shift(high, 2); private val pl2 = shift(low, 2)
+  private val po3 = shift(open, 3); private val pc3 = shift(close, 3)
+  private val ph3 = shift(high, 3); private val pl3 = shift(low, 3)
+  private val po4 = shift(open, 4); private val pc4 = shift(close, 4)
+  private val ph4 = shift(high, 4); private val pl4 = shift(low, 4)
   private val bull = close > open; private val bear = close < open
   private val pBull = pc > po; private val pBear = pc < po
   private val p2Bull = pc2 > po2; private val p2Bear = pc2 < po2
@@ -152,7 +142,7 @@ private[graft] class CandleWaves(
     // middles of the three-methods formation: small bodies inside the
     // first candle's high-low range
     def small(k: Int): Column = {
-      val (ok, ck, hk, lk) = (sh("open", k), sh("close", k), sh("high", k), sh("low", k))
+      val (ok, ck, hk, lk) = (shift(open, k), shift(close, k), shift(high, k), shift(low, k))
       abs(ck - ok) < body4 && hk <= ph4 && lk >= pl4
     }
     Seq(
@@ -217,7 +207,7 @@ private[graft] class CandleWaves(
 
   /** wave 6: the rest of the TA-Lib set. */
   val wave6: Seq[(String, Column)] = {
-    val avgBody = avgBodyIn()
+    val avgBody = rmean(abs(close - open), 10)
     Seq(
       // three rising whites then a black engulfing all three bodies
       "cdl_3_line_strike_bull" -> flag4(
@@ -358,24 +348,4 @@ private[graft] class CandleWaves(
   private def kickDn: Column =
     pBull && pRng > 0 && pBody >= lit(0.95) * pRng &&
       bear && rng > 0 && body >= lit(0.95) * rng && open < pl
-
-  /** wave lookup by registry kind suffix (1-based; "" = wave 1). */
-  def wave(i: Int): Seq[(String, Column)] = i match {
-    case 1 => wave1
-    case 2 => wave2
-    case 3 => wave3
-    case 4 => wave4
-    case 5 => wave5
-    case 6 => wave6
-    case _ => throw new IllegalArgumentException(s"no candle wave $i")
-  }
 }
-
-/** Batch instance: inputs are the canonical window primitives. */
-private[ta] object candleDefs
-    extends CandleWaves(
-      name => col(name),
-      (name, k) => prim.shift(col(name), k),
-      () => prim.rmean(col("high") - col("low"), 10),
-      () => prim.rmean(abs(col("close") - col("open")), 10)
-    )

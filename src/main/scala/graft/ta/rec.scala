@@ -531,6 +531,8 @@ object rec {
       det0 = 0.0; det1 = 0.0
     }
     def update(row: Row): Array[Any] = {
+      // a null close leaves the state untouched and re-emits the last value
+      if (isN(row, iC)) return Array(if (count == 0L) null else jma)
       val price = d(row, iC)
       count += 1
       if (count == 1L) {

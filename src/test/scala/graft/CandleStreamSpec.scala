@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** Round-11 verdict item #3: the six cdl_pattern* flag batches STREAM.
   * This spec runs all ~80 flag columns through a REAL file-source stream
   * (maxFilesPerTrigger=1 ⇒ the per-series state — including the
-  * CandleWaveStage rings, minus its @transient expression array — kryo
+  * LoweringStage rings, minus its @transient bound program — kryo
   * round-trips through the state store between every pair of ticks, and
   * rearm() re-attaches the expressions each batch) and asserts parity with
   * the batch strategy_candles_batch computation row-for-row. */

@@ -253,11 +253,7 @@ class StrategySpec extends AnyFunSuite {
       (fname, df) <- frames
       a = outcome(viaAccessor(df))
       what = s"${spec.kind}${spec.params} on $fname"
-      msg <- a.left.toSeq.collect {
-        // rec.Jma reads close with getDouble: a null close fails the job
-        // on every route alike; every other kind must produce rows
-        case e if spec.kind != "jma" => s"$what: accessor failed: $e"
-      } ++ Seq(
+      msg <- a.left.toSeq.map(e => s"$what: accessor failed: $e") ++ Seq(
         "registry" -> outcome(registry(df, spec)),
         "batch" -> outcome(registry.strategy(df, Strategy("one", Seq(spec))))
       ).flatMap { case (route, out) => difference(out, a).map(d => s"$what: $route vs accessor: $d") } ++
@@ -306,9 +302,9 @@ class StrategySpec extends AnyFunSuite {
 
   /** A Strategy batch must equal folding `registry(df, spec)` over its
     * specs; returns the disagreements. */
-  private def batchVsFold(name: String, specs: Seq[IndicatorSpec], awkwardToo: Boolean = true): Seq[String] =
+  private def batchVsFold(name: String, specs: Seq[IndicatorSpec]): Seq[String] =
     for {
-      (fname, df) <- Seq("bars" -> bars) ++ (if (awkwardToo) Seq("awkward" -> awkward) else Nil)
+      (fname, df) <- Seq("bars" -> bars, "awkward" -> awkward)
       batch = outcome(registry.strategy(df, Strategy(name, specs)))
       d <- batch.left.toOption.orElse(difference(batch, outcome(specs.foldLeft(df)((d, s) => registry(d, s)))))
     } yield s"$name ${specs.map(s => s.kind + s.params).mkString(" then ")} on $fname: $d"
@@ -341,12 +337,9 @@ class StrategySpec extends AnyFunSuite {
       Seq(IndicatorSpec("adx", Map("length" -> 14)), IndicatorSpec("dm", Map("length" -> 14))),
       Seq(IndicatorSpec("dm", Map("length" -> 14)), IndicatorSpec("adx", Map("length" -> 14))),
       // kernel outputs: same names, different parameters
-      Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0)))
+      Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0))),
+      Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
     )
-    // rec.Jma fails on the awkward frame's null closes whatever the route
-    val jma = Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
-    val failures = batchVsFold("collide", jma, awkwardToo = false)
-    assert(failures.isEmpty, failures.mkString("\n"))
     // adx and dm agree on dmp/dmn, so the rule itself on two plans that
     // write one name with different values at different depths
     import graft.ta.StrategyCompiler.{runAll, ColPlan}

@@ -23,22 +23,22 @@ class StreamingCoverageSpec extends AnyFunSuite {
     * streamable through their consumers like amat/aobv). Round 11 adds
     * the six cdl_pattern* flag batches (61 TA-Lib patterns). */
   private val declared: Set[String] = Set(
-    // W-class ring stages (WStage)
+    // W-class rolling kinds
     "sma", "wma", "stdev", "zscore", "mom", "roc",
     "midpoint", "midprice", "willr", "linreg",
-    // seeded-EW fold twins (EwStage/MacdStage)
+    // seeded-EW fold kinds
     "ema", "rsi", "dema", "tema", "macd",
-    // Wilder-composite fold twins (round 10)
+    // Wilder-composite fold kinds (round 10)
     "atr", "natr", "trix", "tsi", "adx", "stoch", "bbands", "kc",
     // REC kernel lowerings (recStream; cusum = fixed-reference mode)
     "psar", "supertrend", "ha", "mcgd", "kalman", "cusum", "ssf", "hwma",
     "rsx", "ebsw", "hwc", "jma", "fisher", "td_seq", "hilo", "qqe",
-    // ELEM / 1-lag stages (round 10)
+    // ELEM / 1-lag kinds (round 10)
     "hl2", "hlc3", "ohlc4", "wcp", "bop", "true_range", "pvol", "pvr",
     "pdist", "slope", "log_return", "percent_return", "increasing", "decreasing",
-    // CUM stages (round 10)
+    // CUM kinds (round 10)
     "vwap", "obv", "ad", "pvt", "nvi", "pvi", "drawdown",
-    // rolling-window stages (round 10)
+    // rolling-window kinds (round 10)
     "alma", "fwma", "pwma", "swma", "sinwma", "hma", "trima",
     "variance", "median", "quantile", "mad", "skew", "kurtosis",
     "geometric_mean", "entropy",
@@ -46,20 +46,23 @@ class StreamingCoverageSpec extends AnyFunSuite {
     "qstick", "ttm_trend", "cci", "ao", "apo", "ppo", "bias", "vwma",
     "donchian", "accbands", "chop", "vortex", "ui", "uo", "brar", "aroon",
     "eom", "mfi", "cmf",
-    // recursive stages (round 10)
+    // recursive kinds (round 10)
     "zlma", "t3", "pvo", "adosc", "efi", "pgo", "kama", "vidya", "dm", "decay",
     // multi-stage composites (round 10, final wave)
     "massi", "rvi", "thermo", "cksp", "amat", "kdj", "rvgi", "smi",
     "squeeze", "squeeze_pro", "stc", "inertia", "aobv", "kvo", "stochrsi",
     // single candle kinds
     "cdl_doji", "cdl_inside", "cdl_z", "candle_utils",
-    // the 61-flag cdl_pattern* batches (round 11: CandleWaveStage evals
-    // the SAME analyzed wave expressions over a flat lag ring)
+    // the 61-flag cdl_pattern* batches (round 11)
     "cdl_pattern", "cdl_pattern_2", "cdl_pattern_3", "cdl_pattern_4",
-    "cdl_pattern_5", "cdl_pattern_6"
+    "cdl_pattern_5", "cdl_pattern_6",
+    // causal column lowerings that stream since every stage steps the
+    // analyzed batch lowering (LoweringStage)
+    "rma", "eri", "kst", "aberration"
   )
 
   test("streamableKinds equals the declared contract, exactly") {
+    TestSpark.spark // windowStream analyzes the lowering in the shared session
     val actual = StreamingTa.streamableKinds
     val missing = declared -- actual
     val undeclared = actual -- declared
@@ -71,6 +74,7 @@ class StreamingCoverageSpec extends AnyFunSuite {
   }
 
   test("every declared kind dispatches to a kernel with a non-empty output schema") {
+    TestSpark.spark
     declared.foreach { k =>
       val spec =
         if (k == "cusum") IndicatorSpec(k, Map("mu" -> 0.0, "sd" -> 1.0))

@@ -6,11 +6,10 @@ import org.apache.spark.sql.types._
 import graft.streaming.StreamingTa
 import graft.ta.{registry, IndicatorSpec}
 
-/** Round-10 ADVICE item: the streaming stages re-state every registry
-  * default (lengths, fast/slow, factors) instead of sharing a table with
-  * Strategy.scala, and the parity specs passed explicit params — so a
-  * default changed on one side would silently diverge streaming from batch.
-  * This spec closes the hole the sanctioned way: EVERY streamable kind runs
+/** Round-10 ADVICE item: streaming stages that re-stated every registry
+  * default (lengths, fast/slow, factors) could drift from batch silently.
+  * Every stage now steps the kind's own lowering, so the defaults are one
+  * table; this spec keeps the check: EVERY streamable kind runs
   * once with an EMPTY param map on both sides (the in-process equivalent of
   * the kernelBatchStream fold vs the registry builder) and must agree
   * value-for-value. A drifted default now fails here by name. */

@@ -151,11 +151,11 @@ class StreamingKernelSpec extends AnyFunSuite {
 
   test("W-class + EW-fold window stream equals batch for the top rolling kinds") {
     // round-5 coverage: sma/wma/stdev/zscore/mom/roc/midpoint/midprice/
-    // willr/linreg through the SAME kernelBatchStream pass (ring-buffer
-    // WStage + pass-through kernel), alongside a REC kernel to prove the
+    // willr/linreg through the SAME kernelBatchStream pass (a stepped
+    // lowering + pass-through kernel), alongside a REC kernel to prove the
     // two families compose in one stateful pass. Round 9 adds ema/rsi
-    // (EwStage — the streaming twins of the SeededComposites fold
-    // kernels EmaSeeded/RsiSeeded): the batch reference below builds
+    // (the SeededComposites fold kernels EmaSeeded/RsiSeeded stepped
+    // one tick at a time): the batch reference below builds
     // them through the registry, i.e. the FOLD accessor path, so
     // fold ≡ stream is asserted DIRECTLY here, not transitively
     // through the staged spellings (round-8 verdict item).
