@@ -37,9 +37,9 @@ import graft.ta.{IndicatorSpec, StrategyCompiler}
   * re-attached by [[StreamStage.rearm]] after the state round-trip. */
 object LoweringStep {
 
-  /** One typed value in the flat state: doubles in `dbl`, longs, ints and
-    * booleans in `lng` (`code` 0, 1, 2); `at` indexes the matching null
-    * flags too. */
+  /** One typed value in the flat state: doubles in `dbl` (`code` 0),
+    * longs, ints and booleans in `lng` (1, 2, 3); `at` indexes the
+    * matching null flags too. */
   final case class Slot(isD: Boolean, code: Int, at: Int)
 
   sealed trait Op extends Serializable
@@ -152,8 +152,12 @@ object LoweringStep {
       scala.util.Try(build(empty)).toOption.flatMap { df =>
         try {
           val p = compile(GraftBridge.analyzed(df), names.getOrElse(df.columns.filterNot(barSchema.fieldNames.contains).toSeq))
-          // one dry tick: an expression the interpreter cannot evaluate fails here, not in a task
-          new LoweringStage(p).update(BarTick("s", 0L, 1.0, 2.0, 0.5, 1.5, 10.0))
+          // one dry tick: an expression that cannot evaluate fails here, not
+          // in a task; a strategy's merged program is also compiled here (a
+          // local session's executor threads then find its classes cached)
+          val dry = BarTick("s", 0L, 1.0, 2.0, 0.5, 1.5, 10.0)
+          if (route == "strategy") new LoweringStage(p).update(dry)
+          else new LoweringStage(p).step(dry, p.units.map(new InterpretedMutableProjection(_)))
           Some(p)
         } catch { case scala.util.control.NonFatal(_) => None }
       }
@@ -387,9 +391,10 @@ final class LoweringStage(@transient private var prog: LoweringStep.Program) ext
   /** The ring value of tick `t` (0-based). */
   private def ringAt(r: Ring, t: Long): Any = get(r.base, (t % r.cap).toInt)
 
-  def update(t: BarTick): Array[Any] = {
+  def update(t: BarTick): Array[Any] = step(t, LoweringStep.units(prog))
+
+  private[streaming] def step(t: BarTick, u: Array[MutableProjection]): Array[Any] = {
     val p = prog
-    val u = LoweringStep.units(p)
     val tick = cnt
     cnt += 1
     var row = new GenericInternalRow(

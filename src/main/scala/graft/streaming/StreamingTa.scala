@@ -575,7 +575,7 @@ object StreamingTa {
 
   private def compileMixed(st: graft.ta.Strategy): MixedCompiled = {
     import org.apache.spark.sql.types.StructType
-    val (causal, specNames) = compileCausalNamed(st, st.ta.filter(lookStream(_).isEmpty))
+    val (causal, specNames) = compileCausal(st, st.ta.filter(lookStream(_).isEmpty))
     val lookMk: Seq[() => LookStage] = st.ta.flatMap(lookStream)
     // column layout in strategy order: a spec's columns where it stands
     val byName = causal.flatMap(_.outs).map(f => f.name -> f).toMap
@@ -827,12 +827,9 @@ object StreamingTa {
     * repeated spec, or a name defined two ways, is rejected. Every spec
     * with a column lowering rides ONE stage, stepping the specs' merged
     * batch plan (shared rings, folds and levels; its columns in spec
-    * order); REC-only specs keep a kernel each, after it. */
-  private def compileCausal(st: graft.ta.Strategy, specs: Seq[graft.ta.IndicatorSpec]): Seq[StreamKernel] =
-    compileCausalNamed(st, specs)._1
-
-  /** [[compileCausal]] plus the names each spec emits, in spec order. */
-  private def compileCausalNamed(
+    * order); REC-only specs keep a kernel each, after it. Returns the
+    * kernels and the names each spec emits. */
+  private def compileCausal(
       st: graft.ta.Strategy,
       specs: Seq[graft.ta.IndicatorSpec]
   ): (Seq[StreamKernel], Seq[Seq[String]]) = {
@@ -869,7 +866,7 @@ object StreamingTa {
     (fused.toSeq ++ recs.map(_._2), sks.map(_.outs.map(_.name)))
   }
 
-  private def compileStrategy(st: graft.ta.Strategy): Seq[StreamKernel] = compileCausal(st, st.ta)
+  private def compileStrategy(st: graft.ta.Strategy): Seq[StreamKernel] = compileCausal(st, st.ta)._1
 
   /** Fold BATCH history into per-series streaming state (the step function
     * minus emission): repartition by series, sort within partitions, one
