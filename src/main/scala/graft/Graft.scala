@@ -136,7 +136,9 @@ object Graft {
 
   /** Per-user value series: the partitioned indicator input.
     * (series_id = user_id, ts = epoch micros, close = value).
-    * 15 series; ~67/667/6667 rows each at sf0.001/0.01/0.1.
+    * The series count scales with the data, the series length does not:
+    * 15 / 150 / 1,500 series and 1,000 / 10,000 / 100,000 rows at
+    * sf0.001 / 0.01 / 0.1, about 67 rows a series (45–99) at each.
     */
   def userSeries(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "series") {

@@ -131,13 +131,11 @@ object LoweringStep {
     cached("columns", spec, None)(empty => graft.ta.registry(empty, spec))
 
   /** The stage program of several specs batched as `registry.strategy`
-    * batches them (post-kwargs specs folded first), emitting `names`:
-    * one chain, so specs share their rings, folds and levels. */
+    * batches them — the very template it re-binds to a bar input —,
+    * emitting `names`: one chain, so specs share their rings, folds and
+    * levels. */
   def strategy(specs: Seq[IndicatorSpec], names: Seq[String]): Option[Program] =
-    cached("strategy", (specs, names), Some(names)) { empty =>
-      val (folded, batched) = specs.partition(s => Seq("offset", "fillna", "prefix", "suffix").exists(s.params.contains))
-      StrategyCompiler.run(folded.foldLeft(empty)(graft.ta.registry(_, _)), batched)
-    }
+    cached("strategy", (specs, names), Some(names))(empty => graft.ta.registry.template(empty.sparkSession, specs, empty.schema))
 
   /** The stage program of a REC kernel's staging levels (their columns
     * stay, temps included: the kernel reads them by name). */

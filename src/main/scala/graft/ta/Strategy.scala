@@ -1,7 +1,11 @@
 package graft.ta
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch-of-indicators surface (reference: pandas_ta/core.py `Strategy`
   * dataclass + `df.ta.strategy()`; SURVEY §2.C).
@@ -129,25 +133,59 @@ object registry {
     * size — see StrategyCompiler) and every REC kernel shares one pass.
     * Output columns are identical to folding `apply` over every spec. */
   def strategy(df: DataFrame, st: Strategy): DataFrame = {
-    // Compiled-plan cache (prepared-statement semantics): the 80-spec batch
-    // costs ~1.7s of Catalyst analysis per build — identical (input plan,
-    // strategy) in one session returns the SAME analyzed DataFrame; every
-    // action still executes from scratch. Key includes every spec kind+param
-    // (sorted, so Map iteration order cannot alias two strategies).
-    val stKey = st.ta
-      .map(s => s.kind + ":" + s.params.toSeq.map { case (k, v) => s"$k=$v" }.sorted.mkString(","))
-      .mkString(";")
+    // Prepared-statement semantics, two memos deep. The analyzed plan
+    // depends only on the specs, the input schema and the analyzer's
+    // confs, so it is built once per such key over a placeholder input
+    // (`template`); a new input only re-binds the template's leaves
+    // (`bind`). The same input in one session still returns the SAME
+    // DataFrame; every action executes from scratch.
+    val spark = df.sparkSession
     graft.CacheRegistry.memoPlan(
-      df.sparkSession,
-      s"strategy:${st.name}:$stKey:${graft.CacheRegistry.planKey(df)}"
-    )(strategyBuild(df, st))
+      spark,
+      s"strategy:${st.name}:${specsKey(st.ta)}:${confKey(spark)}:${graft.CacheRegistry.planKey(df)}"
+    )(bind(template(spark, st.ta, df.schema), df))
   }
 
-  /** Specs carrying post-kwargs rewrite their outputs after the fact, so
-    * they fold through `apply` first, while the plan is still narrow (each
-    * fold step re-analyzes the whole plan); the rest run as one batch. */
-  private def strategyBuild(df: DataFrame, st: Strategy): DataFrame = {
-    val (folded, batched) = st.ta.partition(s => postKeys.exists(s.params.contains))
-    StrategyCompiler.run(folded.foldLeft(df)(apply), batched)
+  /** Spec kinds and params, sorted, so Map iteration order cannot alias
+    * two strategies. */
+  private def specsKey(specs: Seq[IndicatorSpec]): String =
+    specs.map(s => s.kind + ":" + s.params.toSeq.map { case (k, v) => s"$k=$v" }.sorted.mkString(",")).mkString(";")
+
+  /** The confs an analyzed plan bakes in: ANSI casts and arithmetic,
+    * name resolution, time-zone-aware casts. */
+  private def confKey(spark: SparkSession): String = {
+    val c = spark.sessionState.conf
+    s"ansi=${c.ansiEnabled}:cs=${c.caseSensitiveAnalysis}:tz=${c.sessionLocalTimeZone}"
+  }
+
+  /** The analyzed plan of `specs` over an empty placeholder relation of
+    * `schema` (nullability and metadata included), built once per
+    * session, specs, schema and analyzer confs. A build that throws (the
+    * compiler's reserved-name check) caches nothing. Specs carrying
+    * post-kwargs rewrite their outputs after the fact, so they fold
+    * through `apply` first, while the plan is still narrow (each fold
+    * step re-analyzes the whole plan); the rest run as one batch. */
+  private[graft] def template(spark: SparkSession, specs: Seq[IndicatorSpec], schema: StructType): DataFrame =
+    graft.CacheRegistry.memoPlan(spark, s"strategy-template:${specsKey(specs)}:${schema.json}:${confKey(spark)}") {
+      val placeholder = GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema)))
+      val (folded, batched) = specs.partition(s => postKeys.exists(s.params.contains))
+      StrategyCompiler.run(folded.foldLeft(placeholder)(apply), batched)
+    }
+
+  /** The template over `df`: every placeholder occurrence (the analyzer
+    * renews the placeholder where a plan reads its input twice, as
+    * retrospective cusum's self-join does) becomes a Project aliasing
+    * df's columns, by position, to that occurrence's attributes. One
+    * analysis pass over the resolved tree then renews df's relations
+    * where they now occur twice, so no join compares an attribute with
+    * itself. */
+  private def bind(template: DataFrame, df: DataFrame): DataFrame = {
+    val input = GraftBridge.analyzed(df)
+    val shape = input.output.map(a => (a.name, a.dataType, a.nullable))
+    val plan = GraftBridge.analyzed(template).transformUpWithSubqueries {
+      case l: LocalRelation if l.data.isEmpty && l.output.map(a => (a.name, a.dataType, a.nullable)) == shape =>
+        Project(input.output.zip(l.output).map { case (a, p) => Alias(a, p.name)(exprId = p.exprId) }, input)
+    }
+    GraftBridge.ofRows(df.sparkSession, plan)
   }
 }

@@ -13,37 +13,7 @@ class StrategySpec extends AnyFunSuite {
 
   private def bars = Graft.bars(spark, TestSpark.sfDir)
 
-  /** Awkward inputs derived from the bars fixture, one pathology per
-    * series: the plain fixture, a one-row series, nulls, zeros (flat
-    * range, zero volume), NaN, ±∞, magnitudes near 1e300 and duplicate
-    * `ts`. Duplicates are exact copies of whole rows, so every route's
-    * result is determined as a multiset of rows even though the order
-    * of the tied rows is not. */
-  private def awkward: DataFrame = {
-    val b = bars
-    val day = dayofyear(col("ts"))
-    def on(k: Int, r: Int)(c: String, v: org.apache.spark.sql.Column) =
-      when(day % k === r, v).otherwise(col(c))
-    val px = Seq("open", "high", "low", "close")
-    def series(name: String, d: DataFrame) = d.withColumn("series_id", lit(name))
-    val nul = lit(null).cast("double")
-    Seq(
-      b,
-      series("one", b.orderBy("ts").limit(1)),
-      series("nulls", b.withColumn("close", on(5, 2)("close", nul))
-        .withColumn("high", on(7, 3)("high", nul)).withColumn("volume", on(6, 1)("volume", nul))
-        .withColumn("open", on(9, 4)("open", nul))),
-      series("zeros", b.withColumn("close", on(5, 1)("close", lit(0.0)))
-        .withColumn("high", on(4, 2)("high", col("low"))).withColumn("volume", on(3, 0)("volume", lit(0.0)))),
-      series("nan", b.withColumn("close", on(6, 3)("close", lit(Double.NaN)))
-        .withColumn("low", on(8, 5)("low", lit(Double.NaN)))),
-      series("inf", b.withColumn("close", on(7, 2)("close", lit(Double.PositiveInfinity)))
-        .withColumn("high", on(9, 6)("high", lit(Double.PositiveInfinity)))
-        .withColumn("low", on(10, 1)("low", lit(Double.NegativeInfinity)))),
-      series("huge", px.foldLeft(b)((d, c) => d.withColumn(c, col(c) * 1e300))),
-      series("dups", b.unionByName(b.where(day % 4 === 0)))
-    ).reduce(_ unionByName _)
-  }
+  private def awkward: DataFrame = StrategySpec.awkward(bars)
 
   private def emptyBars: DataFrame = bars.where(lit(false))
 
@@ -377,5 +347,39 @@ class StrategySpec extends AnyFunSuite {
   test("unknown indicator raises with the available list") {
     val e = intercept[IllegalArgumentException](bars.taIndicator("nope"))
     assert(e.getMessage.contains("unknown indicator"))
+  }
+}
+
+object StrategySpec {
+
+  /** Awkward inputs derived from the bars fixture, one pathology per
+    * series: the plain fixture, a one-row series, nulls, zeros (flat
+    * range, zero volume), NaN, ±∞, magnitudes near 1e300 and duplicate
+    * `ts`. Duplicates are exact copies of whole rows, so every route's
+    * result is determined as a multiset of rows even though the order
+    * of the tied rows is not. */
+  def awkward(b: DataFrame): DataFrame = {
+    val day = dayofyear(col("ts"))
+    def on(k: Int, r: Int)(c: String, v: org.apache.spark.sql.Column) =
+      when(day % k === r, v).otherwise(col(c))
+    val px = Seq("open", "high", "low", "close")
+    def series(name: String, d: DataFrame) = d.withColumn("series_id", lit(name))
+    val nul = lit(null).cast("double")
+    Seq(
+      b,
+      series("one", b.orderBy("ts").limit(1)),
+      series("nulls", b.withColumn("close", on(5, 2)("close", nul))
+        .withColumn("high", on(7, 3)("high", nul)).withColumn("volume", on(6, 1)("volume", nul))
+        .withColumn("open", on(9, 4)("open", nul))),
+      series("zeros", b.withColumn("close", on(5, 1)("close", lit(0.0)))
+        .withColumn("high", on(4, 2)("high", col("low"))).withColumn("volume", on(3, 0)("volume", lit(0.0)))),
+      series("nan", b.withColumn("close", on(6, 3)("close", lit(Double.NaN)))
+        .withColumn("low", on(8, 5)("low", lit(Double.NaN)))),
+      series("inf", b.withColumn("close", on(7, 2)("close", lit(Double.PositiveInfinity)))
+        .withColumn("high", on(9, 6)("high", lit(Double.PositiveInfinity)))
+        .withColumn("low", on(10, 1)("low", lit(Double.NegativeInfinity)))),
+      series("huge", px.foldLeft(b)((d, c) => d.withColumn(c, col(c) * 1e300))),
+      series("dups", b.unionByName(b.where(day % 4 === 0)))
+    ).reduce(_ unionByName _)
   }
 }
