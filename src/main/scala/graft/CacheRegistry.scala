@@ -69,8 +69,9 @@ object CacheRegistry {
     * Catalyst analysis — resolution is O(levels) fixed-point iterations
     * over the full tree, and non-pruning analyzer rules rescan everything
     * per iteration, a floor the DataFrame API cannot go below). Execution
-    * still runs from scratch on every action; `release`/`releasePlans`
-    * drop the entries. */
+    * still runs from scratch on every action. `release` is the only way
+    * to drop a session's plan memos, and it also unpersists that
+    * session's memoized and tracked DataFrames. */
   private val plans =
     new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]
 

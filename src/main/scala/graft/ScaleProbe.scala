@@ -505,7 +505,7 @@ object ScaleProbe {
 
     // ---- streaming state serialization tax (round 11): kernelBatchStream
     // rides Encoders.javaSerialization — every micro-batch Java-serializes
-    // the full kernel+stage array per SERIES into the state store. Two
+    // the full stage array per SERIES into the state store. Two
     // measurements decide whether that is a scale problem at 10k+ series:
     // (1) microbench the exact state object's ser+deser roundtrip (bytes
     // and µs for the 45-stage strategy state after 200 ticks), and
@@ -515,7 +515,6 @@ object ScaleProbe {
     // fold work is identical.
     if (want("streamser")) {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
       import graft.ta.{IndicatorSpec, Strategy}
       import graft.streaming.StreamingTa
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -529,24 +528,12 @@ object ScaleProbe {
       )
       val st45 = Strategy("s45", bigKinds.map(k => IndicatorSpec(k)))
       val sks = st45.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
-      val barSchema = StructType(Seq(
-        StructField("series_id", StringType), StructField("ts", LongType),
-        StructField("open", DoubleType), StructField("high", DoubleType),
-        StructField("low", DoubleType), StructField("close", DoubleType),
-        StructField("volume", DoubleType)))
-      val extSchemas = sks.map(sp => StructType(barSchema.fields ++ sp.stage().fields))
-      val entries = sks.zip(extSchemas).map { case (sp, es) =>
-        val k = sp.make(); k.init(es); k.reset(); (k, sp.stage())
-      }.toArray
+        StreamingTa.windowStream(s).get)
+      val entries = sks.map(_.stage()).toArray
       (0 until 200).foreach { i =>
         val v = 100.0 + 10.0 * math.sin(i / 7.0)
         val t = StreamingTa.BarTick("s", i.toLong, v, v + 1, v - 1, v + 0.2, 100.0 + i % 7)
-        val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
-        entries.zip(extSchemas).foreach { case ((k, stg), es) =>
-          k.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            base ++ stg.update(t), es))
-        }
+        entries.foreach(_.update(t))
       }
       val stateObj = StreamingTa.BatchKernelState(199L, 0L, entries)
       def ser(o: AnyRef): Array[Byte] = {
@@ -660,7 +647,7 @@ object ScaleProbe {
         (lit(100.0) + col("id") % 7).as("volume")
       ).as[StreamingTa.BarTick]
       val sks = st5.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
+        StreamingTa.windowStream(s).get)
       val bootSec = timed {
         StreamingTa.bootstrapState(hist, sks).collect().length.toLong
       }
@@ -695,7 +682,7 @@ object ScaleProbe {
         IndicatorSpec("atr", Map("length" -> 10)), IndicatorSpec("sma", Map("length" -> 10)),
         IndicatorSpec("psar")))
       val sks = st5.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
+        StreamingTa.windowStream(s).get)
       val m = 8000000
       for (nSeries <- Seq(1, 4, 32, 256)) {
         val hist = spark.range(m).select(
@@ -817,41 +804,6 @@ object ScaleProbe {
         )
         graft.CacheRegistry.releaseTransients(spark)
       }
-      graft.CacheRegistry.release(spark)
-    }
-
-    // ---- REC fold vs mapPartitions kernel (round 9): the same state
-    // machine as a window-buffer fold (accessor path) vs the retained
-    // rec.perSeries kernel spelling — measures what the fold lowering
-    // buys at scale (no Row boxing, no second Exchange when composed,
-    // same O(n) sequential dependency).
-    if (want("recfold")) for (l <- Seq(50000, 200000)) {
-      import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
-      def dblF(s0: String) = StructField(s0, DoubleType, nullable = true)
-      val bars = graft.CacheRegistry.track(
-        series(spark, 256, l).select(
-          col("series_id"), col("ts"),
-          col("close"), (col("close") + 1.5).as("high"), (col("close") - 1.5).as("low"),
-          col("close").as("open"), lit(1000.0).as("volume")
-        )
-      )
-      bars.count()
-      emit("psar_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars,
-          Seq(dblF("psar_long"), dblF("psar_short"), dblF("psar_af"),
-            StructField("psar_reversal", IntegerType, nullable = true)))(
-          () => new graft.ta.rec.Psar()), "psar_af")))
-      emit("psar_fold", 256L * l, timed(force(bars.ta.psar(), "psar_af")))
-      emit("supertrend_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars,
-          Seq(dblF("supert_7"), StructField("supertd_7", IntegerType, nullable = true),
-            dblF("supertl_7"), dblF("superts_7")))(
-          () => new graft.ta.rec.Supertrend(7, 3.0)), "supert_7")))
-      emit("supertrend_fold", 256L * l, timed(force(bars.ta.supertrend(7, 3.0), "supert_7")))
-      emit("rsx_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars, Seq(dblF("rsx_14")))(
-          () => new graft.ta.rec.Rsx(14)), "rsx_14")))
-      emit("rsx_fold", 256L * l, timed(force(bars.ta.rsx(14), "rsx_14")))
       graft.CacheRegistry.release(spark)
     }
 

@@ -1,41 +1,48 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 
-/** Round-9 extension of the SeededComposites fold layer to the
-  * BRANCHING per-row state machines (SURVEY.md §2.A REC class): psar and
-  * supertrend, previously only reachable through rec.Psar/rec.Supertrend
-  * mapPartitions kernels (graft.ta.rec). Both have O(1) state whose
-  * update is a pure If-tree over the previous state — exactly the shape
-  * a DeclarativeAggregate window buffer expresses — so each collapses
-  * into ONE AggregateWindowFunction over the canonical
-  * (series_id, ts) running frame.
+/** The REC-class per-row state machines (SURVEY.md §2.A REC class:
+  * psar, supertrend, jma, cusum, ...) as window folds: each state
+  * machine is ONE AggregateWindowFunction over the canonical
+  * (series_id, ts) running frame, its state in the aggregation buffer.
   *
-  * Why fold instead of mapPartitions (round-8 verdict #1):
-  *  - a mixed W+REC Strategy batch stops paying a second Exchange —
-  *    rec.perSeriesBatch re-`repartition(series_id)`s what the WindowExec
-  *    already partitioned (PlanShapeSpec gate: sma+psar = one Exchange);
-  *  - the canonical hard cases become SQL-callable (`graft_psar`,
-  *    `graft_supertrend`);
-  *  - the fold stays inside Tungsten rows (no Row boxing per row).
+  * Why folds:
+  *  - a mixed W+REC Strategy batch shares the window Exchange (PlanShapeSpec
+  *    gate: sma+psar = one Exchange);
+  *  - the state machines become SQL-callable (`graft_psar`, ...);
+  *  - the fold stays inside Tungsten rows (no Row boxing per row);
+  *  - streaming steps the same buffer one tick at a time (LoweringStage),
+  *    so there is one state machine per kind.
   *
-  * Arithmetic is REPLICATED OPERATION-FOR-OPERATION from the kernel
-  * spellings (rec.scala:112 Psar, rec.scala:172 Supertrend), which stay
-  * as the spec references RecFoldSpec proves bit-identity against —
-  * same If trees, same add/multiply order, same Least/Greatest nesting.
-  * Contract shared with the kernels: non-null high/low/close (bars
-  * schema); ring-buffer kernels (jma, rsx) stay on mapPartitions —
-  * their state is not O(1) expression slots.
+  * Arithmetic is REPLICATED OPERATION-FOR-OPERATION from the reference
+  * kernels (test scope: RecReference), which RecFoldSpec proves
+  * bit-identity against — same If trees, same add/multiply order, same
+  * min/max nesting. Where Catalyst's double semantics differ from Java's
+  * (NaN ordering, StrictMath) the folds call Java's own operations
+  * ([[jmath]], [[j]]), so they agree on NaN and ±∞ inputs too.
   */
 object RecFolds {
 
   private val nullD = Literal.create(null, DoubleType)
   private val nullI = Literal.create(null, IntegerType)
 
+  /** java.lang.Math's `fn` over doubles (null if an argument is):
+    * Catalyst's POWER and LN are StrictMath's, and LEAST/GREATEST skip
+    * nulls and order NaN above every value where Math.min/max return it. */
+  private def jmath(fn: String, args: Expression*): Expression =
+    StaticInvoke(classOf[java.lang.Math], DoubleType, fn, args, returnNullable = false)
+
+  /** Java's comparison `cmp`: false when either side is NaN (Catalyst
+    * orders NaN above every value and equal to itself). */
+  private def j(cmp: BinaryComparison): Expression =
+    And(Not(IsNaN(cmp.left)), And(Not(IsNaN(cmp.right)), cmp))
+
   /** Parabolic SAR (reference: pandas_ta/trend/psar.py, declared spec
     * SURVEY §2.B) as ONE window fold emitting STRUCT(long, short, af,
-    * rev). State machine = rec.Psar verbatim: row 1 records the seed
+    * rev). State machine = RecReference.Psar verbatim: row 1 records the seed
     * bars and emits nulls; row 2 picks the trend from close₁ ≥ close₀
     * and seeds sar/ep; row ≥ 3 steps sar += af·(ep − sar) clamped to
     * the prior two lows (rising) / highs (falling) and bumps af on a
@@ -77,21 +84,21 @@ object RecFolds {
       val isRow1 = EqualTo(posN, Literal(1L))
       val isRow2 = EqualTo(posN, Literal(2L))
       // stage A: row-2 seed or row-≥3 step (kernel lines n==2 / else)
-      val seedRising = GreaterThanOrEqual(c, pc) // close ≥ close₀ (pc = row-1 close)
+      val seedRising = j(GreaterThanOrEqual(c, pc)) // close ≥ close₀ (pc = row-1 close)
       val risingA = If(isRow2, seedRising, rising)
       val sarStep = Add(sar, Multiply(af, Subtract(ep, sar)))
       val sarClamped = If(rising,
-        Least(Seq(sarStep, Least(Seq(pl1, pl2)))),
-        Greatest(Seq(sarStep, Greatest(Seq(ph1, ph2)))))
+        jmath("min", sarStep, jmath("min", pl1, pl2)),
+        jmath("max", sarStep, jmath("max", ph1, ph2)))
       val sarA = If(isRow2, If(seedRising, pl1, ph1), sarClamped) // seed: l₀ / h₀
-      val newExtreme = If(rising, GreaterThan(h, ep), LessThan(l, ep))
+      val newExtreme = If(rising, j(GreaterThan(h, ep)), j(LessThan(l, ep)))
       val epA = If(isRow2,
-        If(seedRising, Greatest(Seq(ph1, h)), Least(Seq(pl1, l))), // max(h₀,h) / min(l₀,l)
+        If(seedRising, jmath("max", ph1, h), jmath("min", pl1, l)), // max(h₀,h) / min(l₀,l)
         If(newExtreme, If(rising, h, l), ep))
       val afA = If(isRow2, Literal(af0),
-        If(newExtreme, Least(Seq(Add(af, Literal(afStep)), Literal(maxAf))), af))
+        If(newExtreme, jmath("min", Add(af, Literal(afStep)), Literal(maxAf)), af))
       // stage B: shared reversal (kernel: rising && l < sar → flip, etc.)
-      val revB = Or(And(risingA, LessThan(l, sarA)), And(Not(risingA), GreaterThan(h, sarA)))
+      val revB = Or(And(risingA, j(LessThan(l, sarA))), And(Not(risingA), j(GreaterThan(h, sarA))))
       val risingN = If(revB, Not(risingA), risingA)
       val sarN = If(revB, epA, sarA)
       val epN = If(revB, If(risingA, l, h), epA)
@@ -126,7 +133,7 @@ object RecFolds {
 
   /** Supertrend (reference: pandas_ta/overlap/supertrend.py, declared
     * spec) as ONE window fold emitting STRUCT(st, dir, long, short).
-    * State machine = rec.Supertrend verbatim: in-fold Wilder ATR over
+    * State machine = RecReference.Supertrend verbatim: in-fold Wilder ATR over
     * the true range (seed tr₁, recurrence (1−1/n)·atr + tr/n), bands
     * ub/lb = hl2 ± mult·atr with the monotone carry gated on the prior
     * close, direction flip when close crosses the carried band. Null
@@ -162,8 +169,7 @@ object RecFolds {
       val isRow1 = EqualTo(posN, Literal(1L))
       val nL = Literal((n + 1).toLong) // first band row
       // tr/atr from row 2 (kernel: trCount == 1 seeds atr = tr)
-      val tr = Greatest(Seq(Subtract(h, l),
-        Greatest(Seq(Abs(Subtract(h, pc)), Abs(Subtract(l, pc))))))
+      val tr = jmath("max", Subtract(h, l), jmath("max", Abs(Subtract(h, pc)), Abs(Subtract(l, pc))))
       val atrN = If(EqualTo(posN, Literal(2L)), tr,
         Add(Multiply(Literal(1.0 - 1.0 / n), atr), Divide(tr, Literal(n.toDouble))))
       // bands from row n+1; carry gated on prior close vs PRIOR bands
@@ -171,10 +177,10 @@ object RecFolds {
       val nub0 = Add(hl2, Multiply(Literal(mult), atrN))
       val nlb0 = Subtract(hl2, Multiply(Literal(mult), atrN))
       val haveB = GreaterThanOrEqual(pos, nL) // bands existed before this row
-      val nlb = If(And(haveB, And(LessThan(nlb0, lb), GreaterThan(pc, lb))), lb, nlb0)
-      val nub = If(And(haveB, And(GreaterThan(nub0, ub), LessThan(pc, ub))), ub, nub0)
+      val nlb = If(And(haveB, And(j(LessThan(nlb0, lb)), j(GreaterThan(pc, lb)))), lb, nlb0)
+      val nub = If(And(haveB, And(j(GreaterThan(nub0, ub)), j(LessThan(pc, ub)))), ub, nub0)
       val dirN = If(haveB,
-        If(GreaterThan(c, ub), Literal(1), If(LessThan(c, lb), Literal(-1), dir)),
+        If(j(GreaterThan(c, ub)), Literal(1), If(j(LessThan(c, lb)), Literal(-1), dir)),
         Literal(1))
       val inBand = GreaterThanOrEqual(posN, nL)
       Seq(
@@ -202,16 +208,12 @@ object RecFolds {
   }
 
   // ==================================================================
-  // Round-9 wave 2: every remaining FIXED-SLOT REC kernel lowers to a
-  // fold (ha, mcgd, ssf, hwma, kalman, ebsw, hwc, td_seq, rsx — even
-  // rsx's 12-filter cascade is twelve named doubles, not a ring).
-  // Only jma (11- and 65-entry volatility rings) stays on
-  // mapPartitions. Arithmetic replicates each kernel spelling
-  // operation-for-operation (RecFoldSpec proves bit-identity); the
-  // kernels remain the streaming path and the spec references.
+  // Wave 2: the fixed-slot state machines (ha, mcgd, ssf, hwma, kalman,
+  // ebsw, hwc, td_seq, rsx — even rsx's 12-filter cascade is twelve
+  // named doubles, not a ring).
   // ==================================================================
 
-  /** Heikin-Ashi bars (rec.HeikinAshi) — STRUCT(ha_open, ha_high,
+  /** Heikin-Ashi bars (RecReference.HeikinAshi) — STRUCT(ha_open, ha_high,
     * ha_low, ha_close). The current bar's high/low ride buffer slots so
     * evaluate sees them (evaluate reads only the buffer). */
   case class HaFold(o: Expression, h: Expression, l: Expression, c: Expression)
@@ -245,15 +247,15 @@ object RecFolds {
     override lazy val evaluateExpression: Expression =
       CreateNamedStruct(Seq(
         Literal("ha_open"), ho,
-        Literal("ha_high"), Greatest(Seq(bh, Greatest(Seq(ho, hc)))),
-        Literal("ha_low"), Least(Seq(bl, Least(Seq(ho, hc)))),
+        Literal("ha_high"), jmath("max", bh, jmath("max", ho, hc)),
+        Literal("ha_low"), jmath("min", bl, jmath("min", ho, hc)),
         Literal("ha_close"), hc
       ))
     override protected def withNewChildrenInternal(c0: IndexedSeq[Expression]): HaFold =
       copy(o = c0(0), h = c0(1), l = c0(2), c = c0(3))
   }
 
-  /** McGinley Dynamic (rec.Mcgd): y₀ = x₀; y += (x−y)/(n·(x/y)⁴),
+  /** McGinley Dynamic (RecReference.Mcgd): y₀ = x₀; y += (x−y)/(n·(x/y)⁴),
     * y = 0 and null inputs hold state (null output until seeded). */
   case class McgdFold(x: Expression, n: Int) extends AggregateWindowFunction {
     override def children: Seq[Expression] = Seq(x)
@@ -275,8 +277,8 @@ object RecFolds {
       // zero-denominator case replicates IEEE explicitly (den ≥ 0 —
       // it is n·r⁴ — so only the +0 signs arise; x = 0 prices hit this)
       val q = If(EqualTo(den, Literal(0.0)),
-        If(GreaterThan(d0, Literal(0.0)), Literal(Double.PositiveInfinity),
-          If(LessThan(d0, Literal(0.0)), Literal(Double.NegativeInfinity), Literal(Double.NaN))),
+        If(j(GreaterThan(d0, Literal(0.0))), Literal(Double.PositiveInfinity),
+          If(j(LessThan(d0, Literal(0.0))), Literal(Double.NegativeInfinity), Literal(Double.NaN))),
         Divide(d0, den))
       val stepped = Add(y, q)
       val yN = If(IsNull(x), y,
@@ -288,7 +290,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** Ehlers 2-pole super smoother (rec.Ssf): y = c1·x + c2·y' + c3·y'',
+  /** Ehlers 2-pole super smoother (RecReference.Ssf): y = c1·x + c2·y' + c3·y'',
     * seeds y₀=x₀, y₁=x₁; null inputs emit the running value. */
   case class SsfFold(x: Expression, n: Int) extends AggregateWindowFunction {
     private val a = math.exp(-math.sqrt(2.0) * math.Pi / n)
@@ -322,7 +324,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** Holt-Winter MA (rec.Hwma): F/V/A recursion, F₀ = x₀. */
+  /** Holt-Winter MA (RecReference.Hwma): F/V/A recursion, F₀ = x₀. */
   case class HwmaFold(x: Expression, na: Double, nb: Double, nc: Double)
       extends AggregateWindowFunction {
     override def children: Seq[Expression] = Seq(x)
@@ -361,7 +363,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** 1-D local-level Kalman filter (rec.Kalman) — STRUCT(kf, kf_gain).
+  /** 1-D local-level Kalman filter (RecReference.Kalman) — STRUCT(kf, kf_gain).
     * Seed x₀ = z₀, P₀ = 1 (gain null on the seed row); null z emits the
     * running level with null gain, state unchanged. */
   case class KalmanFold(z: Expression, q: Double, rNoise: Double)
@@ -403,7 +405,7 @@ object RecFolds {
       copy(z = c0(0))
   }
 
-  /** Ehlers Even Better SineWave (rec.Ebsw): 1-pole HP → 2-pole super
+  /** Ehlers Even Better SineWave (RecReference.Ebsw): 1-pole HP → 2-pole super
     * smoother → 3-bar wave/power normalization; the per-row output uses
     * the PRE-shift filter history, so it rides its own buffer slot. */
   case class EbswFold(c: Expression, n: Int, bars: Int) extends AggregateWindowFunction {
@@ -443,7 +445,7 @@ object RecFolds {
         Add(Add(Multiply(filt, filt), Multiply(f1, f1)), Multiply(f2, f2)),
         Literal(3.0))
       val outN = If(LessThanOrEqual(cN, Literal(3L)), nullD,
-        If(GreaterThan(pwr, Literal(0.0)), Divide(wave, Sqrt(pwr)), nullD))
+        If(j(GreaterThan(pwr, Literal(0.0))), Divide(wave, Sqrt(pwr)), nullD))
       Seq(
         cN,
         c,
@@ -458,7 +460,7 @@ object RecFolds {
       copy(c = c0(0))
   }
 
-  /** Holt-Winter channel (rec.Hwc) — STRUCT(hwc_mid, hwc_upper,
+  /** Holt-Winter channel (RecReference.Hwc) — STRUCT(hwc_mid, hwc_upper,
     * hwc_lower): the hwma F/V/A recursion plus the variance recursion
     * var = (1−nd)·var' + nd·(x − hwma')²; after the update prevHwma IS
     * the current mid, so evaluate reads straight from the buffer. */
@@ -521,7 +523,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** TD Sequential setup counters (rec.TdSeq) — STRUCT(td_seq_up,
+  /** TD Sequential setup counters (RecReference.TdSeq) — STRUCT(td_seq_up,
     * td_seq_dn). Self-contained: the close[4] lag rides four shift
     * slots instead of a staged column, so the fold needs only `close`. */
   case class TdSeqFold(c: Expression) extends AggregateWindowFunction {
@@ -547,9 +549,9 @@ object RecFolds {
     override lazy val updateExpressions: Seq[Expression] = {
       val c4 = p4 // lag(close, 4) at this row
       val skip = IsNull(c4)
-      val upN = If(GreaterThan(c, c4),
+      val upN = If(j(GreaterThan(c, c4)),
         If(EqualTo(up, Literal(9L)), Literal(1L), Add(up, Literal(1L))), Literal(0L))
-      val dnN = If(LessThan(c, c4),
+      val dnN = If(j(LessThan(c, c4)),
         If(EqualTo(dn, Literal(9L)), Literal(1L), Add(dn, Literal(1L))), Literal(0L))
       Seq(
         c, p1, p2, p3,
@@ -569,7 +571,7 @@ object RecFolds {
       copy(c = c0(0))
   }
 
-  /** Jurik RSX (rec.Rsx): not a ring buffer after all — the three-stage
+  /** Jurik RSX (RecReference.Rsx): not a ring buffer after all — the three-stage
     * cascade is twelve NAMED filter slots plus the prev-momentum slot,
     * all O(1), so it folds like everything else. v14/v20 derive from the
     * post-update slots at evaluate. */
@@ -626,7 +628,7 @@ object RecFolds {
       // kernel: 100.0 * (v14 / v20 + 1.0) / 2.0 — left-assoc: (100·x)/2
       val raw = Divide(
         Multiply(Literal(100.0), Add(Divide(v14, v20), Literal(1.0))), Literal(2.0))
-      val clamped = Greatest(Seq(Literal(0.0), Least(Seq(Literal(100.0), raw))))
+      val clamped = jmath("max", Literal(0.0), jmath("min", Literal(100.0), raw))
       If(LessThanOrEqual(cnt, Literal((n + 1).toLong)), nullD,
         If(EqualTo(v20, Literal(0.0)), Literal(50.0), clamped))
     }
@@ -635,21 +637,18 @@ object RecFolds {
   }
 
   // ==================================================================
-  // Round-9 wave 3: the STAGED-INPUT state machines (hilo, fisher,
-  // qqe). Their window-derived inputs (rolling means, the fisher range
-  // position, qqe's smoothed-RSI/DAR chain) stay as staged columns —
-  // a window expression can't nest inside another window expression —
-  // but the per-row recursion consuming them folds like everything
-  // else, so the mapPartitions pass (and its re-repartition) goes
-  // away. After this wave only jma (ring buffers) and cusum
-  // (broadcast stats join) use rec.perSeries.
+  // Wave 3: the STAGED-INPUT state machines (hilo, fisher, qqe). Their
+  // window-derived inputs (rolling means, the fisher range position,
+  // qqe's smoothed-RSI/DAR chain) stay as staged columns — a window
+  // expression can't nest inside another window expression — but the
+  // per-row recursion consuming them folds like everything else.
   // ==================================================================
 
-  /** Gann HiLo activator (rec.Hilo) — STRUCT(hilo, hilo_long,
+  /** Gann HiLo activator (RecReference.Hilo) — STRUCT(hilo, hilo_long,
     * hilo_short). Children: close + the staged sma(high,hn)/sma(low,ln)
-    * columns. Trend flips on the PREVIOUS row's bands; output uses the
-    * CURRENT bands, which after the update are exactly the pmh/pml
-    * slots. */
+    * columns, a null band read as NaN as the kernel does. Trend flips on
+    * the PREVIOUS row's bands; output uses the CURRENT bands, which after
+    * the update are exactly the pmh/pml slots. */
   case class HiloFold(c: Expression, mh: Expression, ml: Expression)
       extends AggregateWindowFunction {
     override def children: Seq[Expression] = Seq(c, mh, ml)
@@ -662,18 +661,19 @@ object RecFolds {
     override def prettyName: String = "graft_hilo_k"
 
     private lazy val trend = AttributeReference("hiloTrend", IntegerType, nullable = false)()
-    private lazy val pmh = AttributeReference("hiloPmh", DoubleType, nullable = true)()
-    private lazy val pml = AttributeReference("hiloPml", DoubleType, nullable = true)()
+    private lazy val pmh = AttributeReference("hiloPmh", DoubleType, nullable = false)()
+    private lazy val pml = AttributeReference("hiloPml", DoubleType, nullable = false)()
     private lazy val valid = AttributeReference("hiloValid", BooleanType, nullable = false)()
     override def aggBufferAttributes: Seq[AttributeReference] = Seq(trend, pmh, pml, valid)
     override val initialValues: Seq[Expression] =
-      Seq(Literal(0), nullD, nullD, Literal(false))
+      Seq(Literal(0), Literal(Double.NaN), Literal(Double.NaN), Literal(false))
     override lazy val updateExpressions: Seq[Expression] = {
-      val prevNull = Or(IsNull(pmh), IsNull(pml))
-      val trendN = If(prevNull, trend,
-        If(GreaterThan(c, pmh), Literal(1),
-          If(LessThan(c, pml), Literal(-1), trend)))
-      Seq(trendN, mh, ml, Not(prevNull))
+      val prevNaN = Or(IsNaN(pmh), IsNaN(pml))
+      val trendN = If(prevNaN, trend,
+        If(j(GreaterThan(c, pmh)), Literal(1),
+          If(j(LessThan(c, pml)), Literal(-1), trend)))
+      def orNaN(band: Expression) = If(IsNull(band), Literal(Double.NaN), band)
+      Seq(trendN, orNaN(mh), orNaN(ml), Not(prevNaN))
     }
     override lazy val evaluateExpression: Expression = {
       val isUp = EqualTo(trend, Literal(1))
@@ -689,7 +689,7 @@ object RecFolds {
       copy(c = c0(0), mh = c0(1), ml = c0(2))
   }
 
-  /** Fisher transform recursion (rec.Fisher) — STRUCT(fisher, signal).
+  /** Fisher transform recursion (RecReference.Fisher) — STRUCT(fisher, signal).
     * Child: the staged range-position column (null during warm-up holds
     * state and emits nulls). Outputs ride buffer slots because the
     * signal is the PRE-update fisher value. */
@@ -712,11 +712,11 @@ object RecFolds {
       Seq(Literal(0.0), Literal(0.0), Literal(false), nullD, nullD)
     override lazy val updateExpressions: Seq[Expression] = {
       val nvRaw = Add(Multiply(Literal(0.66), pos), Multiply(Literal(0.67), v))
-      val nv = If(GreaterThan(nvRaw, Literal(0.999)), Literal(0.999),
-        If(LessThan(nvRaw, Literal(-0.999)), Literal(-0.999), nvRaw))
+      val nv = If(j(GreaterThan(nvRaw, Literal(0.999))), Literal(0.999),
+        If(j(LessThan(nvRaw, Literal(-0.999))), Literal(-0.999), nvRaw))
       val nf = Add(
         Multiply(Literal(0.5),
-          Log(Divide(Add(Literal(1.0), nv), Subtract(Literal(1.0), nv)))),
+          jmath("log", Divide(Add(Literal(1.0), nv), Subtract(Literal(1.0), nv)))),
         Multiply(Literal(0.5), fish))
       val skip = IsNull(pos)
       Seq(
@@ -733,7 +733,7 @@ object RecFolds {
       copy(pos = c0(0))
   }
 
-  /** QQE trailing bands (rec.Qqe) — STRUCT(qqe, trend, long, short).
+  /** QQE trailing bands (RecReference.Qqe) — STRUCT(qqe, trend, long, short).
     * Children: the staged smoothed-RSI (__rsima) and DAR (__dar)
     * columns. Band carry and trend flip read the PREVIOUS state; the
     * outputs are exactly the post-update slots. */
@@ -762,10 +762,10 @@ object RecFolds {
       val skip = Or(IsNull(r), IsNull(dar))
       val nl = Subtract(r, dar)
       val ns = Add(r, dar)
-      val lb = If(And(GreaterThan(pr, plb), GreaterThan(r, plb)), Greatest(Seq(plb, nl)), nl)
-      val sb = If(And(LessThan(pr, psb), LessThan(r, psb)), Least(Seq(psb, ns)), ns)
-      val trendN = If(And(GreaterThan(r, psb), LessThanOrEqual(pr, psb)), Literal(1),
-        If(And(LessThan(r, plb), GreaterThanOrEqual(pr, plb)), Literal(-1), trend))
+      val lb = If(And(j(GreaterThan(pr, plb)), j(GreaterThan(r, plb))), jmath("max", plb, nl), nl)
+      val sb = If(And(j(LessThan(pr, psb)), j(LessThan(r, psb))), jmath("min", psb, ns), ns)
+      val trendN = If(And(j(GreaterThan(r, psb)), j(LessThanOrEqual(pr, psb))), Literal(1),
+        If(And(j(LessThan(r, plb)), j(GreaterThanOrEqual(pr, plb))), Literal(-1), trend))
       Seq(
         Or(have, Not(skip)),
         If(skip, pr, r),
@@ -787,5 +787,150 @@ object RecFolds {
     }
     override protected def withNewChildrenInternal(c0: IndexedSeq[Expression]): QqeFold =
       copy(r = c0(0), dar = c0(1))
+  }
+
+  // ==================================================================
+  // Wave 4: jma's volatility rings and cusum's standardized drift
+  // statistics — after this wave every REC kind is a fold.
+  // ==================================================================
+
+  /** Jurik MA (RecReference.Jma): adaptive volatility bands modulate the
+    * smoothing power through a 10-tick volatility sum and its 65-tick
+    * average. The kernel's 11- and 65-entry rings are 76 flat double
+    * slots, written at count mod 11 and count mod 65 (count = the closes
+    * seen before this row). The average re-sums slots 0..m−1 left to
+    * right as the kernel does; the part of that sum before the written
+    * slot rides the `pre` slot — the same partial sum, carried from the
+    * previous row — so the written value enters the tree once. A null
+    * close re-emits the last value and leaves the state unchanged. */
+  case class JmaFold(c: Expression, n: Int, phase: Double) extends AggregateWindowFunction {
+    private val len1 = math.max(math.log(math.sqrt(0.5 * (n - 1))) / math.log(2.0) + 2.0, 0.0)
+    private val pow1 = math.max(len1 - 2.0, 0.5)
+    private val len2 = math.sqrt(0.5 * (n - 1)) * len1
+    private val pr = if (phase < -100) 0.5 else if (phase > 100) 2.5 else 1.5 + phase * 0.01
+    private val beta = 0.45 * (n - 1) / (0.45 * (n - 1) + 2.0)
+    override def children: Seq[Expression] = Seq(c)
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
+    override def prettyName: String = "graft_jma_k"
+
+    private def dbl(name: String) = AttributeReference(name, DoubleType, nullable = false)()
+    private lazy val cnt = AttributeReference("jmaCnt", LongType, nullable = false)()
+    private lazy val ub = dbl("jmaUb")
+    private lazy val lb = dbl("jmaLb")
+    private lazy val ma1 = dbl("jmaMa1")
+    private lazy val jma = dbl("jmaJma")
+    private lazy val det0 = dbl("jmaDet0")
+    private lazy val det1 = dbl("jmaDet1")
+    private lazy val vSum = dbl("jmaVSum")
+    private lazy val pre = dbl("jmaPre")
+    private lazy val volty = (0 until 11).map(i => dbl(s"jmaVolty$i"))
+    private lazy val vsum = (0 until 65).map(i => dbl(s"jmaVsum$i"))
+    private lazy val state = Seq(ub, lb, ma1, jma, det0, det1, vSum, pre)
+    override def aggBufferAttributes: Seq[AttributeReference] = (cnt +: state) ++ volty ++ vsum
+    override val initialValues: Seq[Expression] = Literal(0L) +: Seq.fill(8 + 11 + 65)(Literal(0.0))
+
+    override lazy val updateExpressions: Seq[Expression] = {
+      def l(v: Long) = Literal(v)
+      def d(v: Double) = Literal(v)
+      val del1 = Subtract(c, ub)
+      val del2 = Subtract(c, lb)
+      val a1 = Abs(del1)
+      val a2 = Abs(del2)
+      // kernel: if (|del1| != |del2|) max(|del1|, |del2|) else 0.0
+      val v = If(Not(j(EqualTo(a1, a2))), jmath("max", a1, a2), d(0.0))
+      val w11 = Remainder(cnt, l(11L))
+      val w65 = Remainder(cnt, l(65L))
+      // kernel: voltyBuf((count - 1 + 11 - min(count - 1, 10)) % 11), read
+      // after the write from a slot the write never touches
+      val r11 = Remainder(Subtract(Add(cnt, l(11L)), Least(Seq(cnt, l(10L)))), l(11L))
+      val voltyOld = CaseWhen((0 until 10).map(i => EqualTo(r11, l(i.toLong)) -> (volty(i): Expression)), volty(10))
+      val vSumN = Add(vSum, Divide(Subtract(v, voltyOld), d(10.0)))
+      val m = Least(Seq(cnt, l(65L)))
+      // kernel: s = Σ_{i<m} vsumBuf(i); below a full ring the written slot
+      // lies past m−1, so s is the prefix itself
+      val s = If(GreaterThanOrEqual(cnt, l(65L)),
+        vsum.zipWithIndex.foldLeft(Add(pre, vSumN): Expression) { case (acc, (slot, i)) =>
+          Add(acc, If(GreaterThan(l(i.toLong), w65), slot, d(0.0)))
+        },
+        pre)
+      val avgVolty = If(GreaterThan(m, l(0L)), Divide(s, Cast(m, DoubleType)), d(0.0))
+      val dVolty = If(j(GreaterThan(avgVolty, d(0.0))), Divide(v, avgVolty), d(0.0))
+      val rVolty = jmath("max", d(1.0), jmath("min", d(math.pow(len1, 1.0 / pow1)), dVolty))
+      val pow2 = jmath("pow", rVolty, d(pow1))
+      val kv = jmath("pow", d(len2 / (len2 + 1.0)), Sqrt(pow2))
+      val ubN = If(j(GreaterThan(del1, d(0.0))), c, Subtract(c, Multiply(kv, del1)))
+      val lbN = If(j(LessThan(del2, d(0.0))), c, Subtract(c, Multiply(kv, del2)))
+      // adaptive EMA
+      val alpha = jmath("pow", d(beta), pow2)
+      val ma1N = Add(Multiply(Subtract(d(1.0), alpha), c), Multiply(alpha, ma1))
+      val det0N = Add(Multiply(Subtract(c, ma1N), d(1.0 - beta)), Multiply(d(beta), det0))
+      val ma2 = Add(ma1N, Multiply(d(pr), det0N))
+      val det1N = Add(
+        Multiply(Subtract(ma2, jma), jmath("pow", Subtract(d(1.0), alpha), d(2.0))),
+        Multiply(Multiply(alpha, alpha), det1))
+      val jmaN = Add(jma, det1N)
+      val preN = If(EqualTo(w65, l(64L)), d(0.0), Add(pre, vSumN))
+      // row 1 seeds the bands, ma1 and jma with the close; a null close
+      // leaves every slot as it is
+      val first = EqualTo(cnt, l(0L))
+      def step(slot: AttributeReference, seed: Expression, next: Expression): Expression =
+        If(IsNull(c), slot, If(first, seed, next))
+      Seq(If(IsNull(c), cnt, Add(cnt, l(1L)))) ++
+        state.zip(Seq(c, c, c, c, det0, det1, vSum, pre)).zip(Seq(ubN, lbN, ma1N, jmaN, det0N, det1N, vSumN, preN)).map {
+          case ((slot, seed), next) => step(slot, seed, next)
+        } ++
+        volty.zipWithIndex.map { case (slot, i) => step(slot, slot, If(EqualTo(w11, l(i.toLong)), v, slot)) } ++
+        vsum.zipWithIndex.map { case (slot, i) => step(slot, slot, If(EqualTo(w65, l(i.toLong)), vSumN, slot)) }
+    }
+    override lazy val evaluateExpression: Expression = If(EqualTo(cnt, Literal(0L)), nullD, jma)
+    override protected def withNewChildrenInternal(c0: IndexedSeq[Expression]): JmaFold =
+      copy(c = c0(0))
+  }
+
+  /** Two-sided CUSUM (RecReference.Cusum) — STRUCT(pos, neg, alarm) over
+    * the standardized series z = (x − μ)/σ: sp = max(0, sp + z − k),
+    * sn = max(0, sn − z − k), alarm = sp > h or sn > h. μ and σ are
+    * literals (a trained reference) or the per-series columns the
+    * retrospective mode joins on. Emits the pre-reset statistics; an
+    * alarm resets both to 0. A null x, μ or σ, or σ = 0, emits nulls and
+    * leaves the state unchanged. */
+  case class CusumFold(x: Expression, mu: Expression, sd: Expression, k: Double, h: Double)
+      extends AggregateWindowFunction {
+    override def children: Seq[Expression] = Seq(x, mu, sd)
+    override def dataType: DataType = StructType(Seq(
+      StructField("pos", DoubleType),
+      StructField("neg", DoubleType),
+      StructField("alarm", LongType)
+    ))
+    override def nullable: Boolean = false
+    override def prettyName: String = "graft_cusum_k"
+
+    private lazy val sp = AttributeReference("cusumSp", DoubleType, nullable = false)()
+    private lazy val sn = AttributeReference("cusumSn", DoubleType, nullable = false)()
+    private lazy val outP = AttributeReference("cusumOutP", DoubleType, nullable = true)()
+    private lazy val outN = AttributeReference("cusumOutN", DoubleType, nullable = true)()
+    private lazy val outA = AttributeReference("cusumOutA", LongType, nullable = true)()
+    override def aggBufferAttributes: Seq[AttributeReference] = Seq(sp, sn, outP, outN, outA)
+    override val initialValues: Seq[Expression] =
+      Seq(Literal(0.0), Literal(0.0), nullD, nullD, Literal.create(null, LongType))
+    override lazy val updateExpressions: Seq[Expression] = {
+      val skip = Or(IsNull(x), Or(IsNull(mu), Or(IsNull(sd), EqualTo(sd, Literal(0.0)))))
+      val z = Divide(Subtract(x, mu), sd)
+      val spN = jmath("max", Literal(0.0), Subtract(Add(sp, z), Literal(k)))
+      val snN = jmath("max", Literal(0.0), Subtract(Subtract(sn, z), Literal(k)))
+      val alarm = Or(j(GreaterThan(spN, Literal(h))), j(GreaterThan(snN, Literal(h))))
+      Seq(
+        If(skip, sp, If(alarm, Literal(0.0), spN)),
+        If(skip, sn, If(alarm, Literal(0.0), snN)),
+        If(skip, nullD, spN),
+        If(skip, nullD, snN),
+        If(skip, Literal.create(null, LongType), If(alarm, Literal(1L), Literal(0L)))
+      )
+    }
+    override lazy val evaluateExpression: Expression =
+      CreateNamedStruct(Seq(Literal("pos"), outP, Literal("neg"), outN, Literal("alarm"), outA))
+    override protected def withNewChildrenInternal(c0: IndexedSeq[Expression]): CusumFold =
+      copy(x = c0(0), mu = c0(1), sd = c0(2))
   }
 }

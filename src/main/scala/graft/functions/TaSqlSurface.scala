@@ -26,7 +26,7 @@ import graft.ta.{prim => P}
   * ONE AggregateWindowFunction, so no nesting arises. Phase 3 (round 9)
   * extends the same machinery to the Wilder/rma-seeded composites
   * (atr/natr/stoch/bbands/trix/tsi/adx) and the branching REC state
-  * machines (psar, supertrend — RecFolds).
+  * machines (psar, supertrend, ..., jma, cusum — RecFolds).
   *
   * Both registration paths consume this one list: `Registry.register`
   * (programmatic, Graft.init) and `GraftExtensions` (cluster-wide via
@@ -178,6 +178,12 @@ object TaSqlSurface {
     ar("graft_hilo_k", 3)(es => RecFolds.HiloFold(dblE(es(0)), dblE(es(1)), dblE(es(2)))),
     ar("graft_fisher_k", 1)(es => RecFolds.FisherFold(dblE(es(0)))),
     ar("graft_qqe_k", 2)(es => RecFolds.QqeFold(dblE(es(0)), dblE(es(1)))),
+    ar("graft_jma_k", 3)(es =>
+      RecFolds.JmaFold(dblE(es(0)), intLit(es(1), "graft_jma_k"), dblLit(es(2), "graft_jma_k"))),
+    // cusum's reference μ/σ are expressions: literals, or per-series columns
+    ar("graft_cusum_k", 5)(es =>
+      RecFolds.CusumFold(dblE(es(0)), dblE(es(1)), dblE(es(2)),
+        dblLit(es(3), "graft_cusum_k"), dblLit(es(4), "graft_cusum_k"))),
     // ---- Wilder/rma-seeded composite folds (phase 3) ---------------------
     ar("graft_atr_k", 4)(es =>
       SeededComposites.AtrFold(dblE(es(0)), dblE(es(1)), dblE(es(2)), intLit(es(3), "graft_atr_k"))),

@@ -94,9 +94,9 @@ object Halo {
     val minRows = spark.conf.get(AutoMinRowsKey, "100000").toLong
     val (nSeries, nRows) = seriesStats(df)
     if (nSeries == 0L || nSeries >= threshold) return None
-    val perSeries = nRows / nSeries
-    if (perSeries < minRows) return None
-    val chunks = math.min(cores.toLong, perSeries / math.max(minChunkRows, 64L)).toInt
+    val rowsPerSeries = nRows / nSeries
+    if (rowsPerSeries < minRows) return None
+    val chunks = math.min(cores.toLong, rowsPerSeries / math.max(minChunkRows, 64L)).toInt
     if (chunks < 2) None else Some(chunks)
   }
 

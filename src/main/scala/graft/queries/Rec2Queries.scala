@@ -232,7 +232,7 @@ object Rec2Queries {
   }
 
   // ------------------------------------------------------------- cusum
-  /** Two-sided CUSUM changepoint flags per user series (rec.Cusum): the
+  /** Two-sided CUSUM changepoint flags per user series (RecFolds.CusumFold): the
     * per-series μ/σ are rounded to 6 dp on BOTH engines before the
     * recursion, so the fold runs from bit-identical inputs and the
     * alarm comparisons cannot straddle an ulp. */
@@ -286,7 +286,7 @@ object Rec2Queries {
   }
 
   // ------------------------------------------------------------- kalman
-  /** 1-D Kalman local-level filter per user series (rec.Kalman): the
+  /** 1-D Kalman local-level filter per user series (RecFolds.KalmanFold): the
     * predict/gain/update recursion replayed step-for-step as a recursive
     * CTE — gain is state-only arithmetic, so both engines fold identical
     * doubles. Null-close rows mirror the kernel exactly (emit current

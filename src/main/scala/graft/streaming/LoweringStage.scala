@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.StreamingTa.{BarTick, StreamStage}
-import graft.ta.{IndicatorSpec, StrategyCompiler}
+import graft.ta.IndicatorSpec
 
 /** The streaming twin of a column lowering, generated from its analyzed
   * batch plan: [[LoweringStage]] steps the chain of Project and Window
@@ -137,10 +137,22 @@ object LoweringStep {
   def strategy(specs: Seq[IndicatorSpec], names: Seq[String]): Option[Program] =
     cached("strategy", (specs, names), Some(names))(empty => graft.ta.registry.template(empty.sparkSession, specs, empty.schema))
 
-  /** The stage program of a REC kernel's staging levels (their columns
-    * stay, temps included: the kernel reads them by name). */
-  def staging(spec: IndicatorSpec, levels: Seq[StrategyCompiler.Level]): Option[Program] =
-    cached("staging", spec, None)(empty => StrategyCompiler.runAll(empty, Seq(StrategyCompiler.ColPlan(levels, Nil)), Nil))
+  /** The stage program of one running fold over rows of `inputs` (no bar
+    * relation, no window chain) emitting its struct result's fields: the
+    * trained-stats cusum steps CusumFold over (close, μ, σ). */
+  def fold(f: DeclarativeAggregate, inputs: Seq[Attribute]): Program = {
+    val st = f.dataType.asInstanceOf[StructType]
+    val slots = new Slots
+    val buf = f.aggBufferAttributes.map(a => slots(a.dataType, 1)).toArray
+    val units = Array(
+      f.updateExpressions.map(BindReferences.bindReference(_, f.aggBufferAttributes ++ inputs)),
+      Seq(BindReferences.bindReference(f.evaluateExpression, f.aggBufferAttributes)),
+      st.indices.map(i => GetStructField(BoundReference(inputs.size, st, nullable = false), i)))
+    new Program(
+      Array(Win(Array.empty, Run(buf, 0, 1, 0), Array(RunOut(0))), Proj(Array.fill(st.size)(-1), 2)),
+      units, st.indices.toArray, st.fields.toSeq.map(_.copy(nullable = true)), slots.nD, slots.nL,
+      buf.zip(f.initialValues.map(_.eval())), readsSeries = false, nRuns = 1)
+  }
 
   private def cached(route: String, key: Any, names: Option[Seq[String]])(build: DataFrame => DataFrame): Option[Program] = {
     val spark = session
@@ -170,6 +182,18 @@ object LoweringStep {
     case IntegerType => 2
     case BooleanType => 3
     case other => unsupported(s"state of type $other")
+  }
+
+  /** Allocates the flat state: `width` consecutive slots of a type. */
+  private final class Slots {
+    var nD = 0
+    var nL = 0
+    def apply(dt: DataType, width: Int): Slot = {
+      val c = slotCode(dt)
+      val s = Slot(c == 0, c, if (c == 0) nD else nL)
+      if (c == 0) nD += width else nL += width
+      s
+    }
   }
 
   private def integral(e: Expression): Long = e match {
@@ -225,14 +249,7 @@ object LoweringStep {
       case leaf if leaf.children.isEmpty && leaf.output.map(_.name) == barSchema.fieldNames.toSeq => Nil
       case other => unsupported(other.nodeName)
     }
-    var nD = 0
-    var nL = 0
-    def alloc(dt: DataType, width: Int): Slot = {
-      val c = slotCode(dt)
-      val s = Slot(c == 0, c, if (c == 0) nD else nL)
-      if (c == 0) nD += width else nL += width
-      s
-    }
+    val alloc = new Slots
     val init = scala.collection.mutable.ArrayBuffer.empty[(Slot, Any)]
     val units = scala.collection.mutable.ArrayBuffer.empty[Seq[Expression]]
     var nRuns = 0
@@ -343,7 +360,7 @@ object LoweringStep {
       case _ => Nil
     }
     new Program(ops, units.toArray, outIdx, outIdx.map(i => StructField(out(i).name, out(i).dataType, nullable = true)).toSeq,
-      nD, nL, init.toArray, reads.exists(_.name == "series_id"), nRuns)
+      alloc.nD, alloc.nL, init.toArray, reads.exists(_.name == "series_id"), nRuns)
   }
 }
 
@@ -391,13 +408,19 @@ final class LoweringStage(@transient private var prog: LoweringStep.Program) ext
 
   def update(t: BarTick): Array[Any] = step(t, LoweringStep.units(prog))
 
-  private[streaming] def step(t: BarTick, u: Array[MutableProjection]): Array[Any] = {
+  /** One row of a [[LoweringStep.fold]] program's inputs. */
+  def update(in: GenericInternalRow): Array[Any] = run(in, LoweringStep.units(prog))
+
+  private[streaming] def step(t: BarTick, u: Array[MutableProjection]): Array[Any] =
+    run(new GenericInternalRow(
+      Array[Any](if (prog.readsSeries) UTF8String.fromString(t.series_id) else null,
+        t.ts, t.open, t.high, t.low, t.close, t.volume)), u)
+
+  private def run(in: GenericInternalRow, u: Array[MutableProjection]): Array[Any] = {
     val p = prog
     val tick = cnt
     cnt += 1
-    var row = new GenericInternalRow(
-      Array[Any](if (p.readsSeries) UTF8String.fromString(t.series_id) else null,
-        t.ts, t.open, t.high, t.low, t.close, t.volume))
+    var row = in
     var o = 0
     while (o < p.ops.length) {
       p.ops(o) match {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * indicator streamable:
   *  - bar construction = tumbling event-time window + watermark;
   *  - EW/REC indicators = `flatMapGroupsWithState` keyed by series_id,
-  *    carrying exactly the O(1) recurrence state the batch kernels use, so
+  *    carrying exactly the O(1) recurrence state the batch folds use, so
   *    streaming output ≡ batch output row-for-row (StreamingParitySpec);
   *  - exact dedup = `dropDuplicates` on the content hash with watermark.
   *
@@ -39,7 +39,7 @@ object StreamingTa {
     * bounds it.
     *
     * Contract of an eviction (StreamingIdleTtlSpec):
-    *  - the series' kernel/stage state AND its in-order watermark
+    *  - the series' stage state AND its in-order watermark
     *    (`lastTs`) are gone: if the series later resumes, it is a FRESH
     *    series — warm-up restarts, and ticks with ts ≤ the evicted
     *    lastTs are folded, not dropped (exactly like a brand-new key;
@@ -160,92 +160,16 @@ object StreamingTa {
       .flatMapGroupsWithState(OutputMode.Append(), idleTimeout(ttl))(withIdleTtl(ttl)(step))
   }
 
-  /** OHLCV tick for kernel streaming. */
+  /** OHLCV tick for stage streaming. */
   case class BarTick(
       series_id: String, ts: Long,
       open: Double, high: Double, low: Double, close: Double, volume: Double
   )
 
-  case class KernelOut(series_id: String, ts: Long, values: Seq[Option[Double]])
-
-  private val barSchema = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField("series_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("open", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("high", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("low", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("close", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("volume", org.apache.spark.sql.types.DoubleType)
-    )
-  )
-
-  /** Stream ANY batch REC kernel (graft.ta.rec.Kernel — psar, supertrend,
-    * ha, mcgd, …) over an OHLCV tick stream: the kernel object itself IS
-    * the per-key state (kryo-serialized between micro-batches — measured
-    * 4.5× faster and 38% smaller than java serialization, SCALING.md
-    * round-11 row; still CLASS-COUPLED: editing a kernel class
-    * invalidates checkpoints, see StreamingRestartSpec), so
-    * streaming output ≡ the batch mapPartitions pass row-for-row.
-    * Same per-key in-order requirement as `indicators`; for the enforced
-    * late-tick contract use [[kernelBatchStream]] with one spec. */
-  def kernelStream(
-      ticks: Dataset[BarTick],
-      make: () => graft.ta.rec.Kernel
-  ): Dataset[KernelOut] = {
-    val spark = ticks.sparkSession
-    import spark.implicits._
-    implicit val kernelEnc: org.apache.spark.sql.Encoder[graft.ta.rec.Kernel] =
-      org.apache.spark.sql.Encoders.kryo[graft.ta.rec.Kernel]
-
-    def step(
-        key: String,
-        rows: Iterator[BarTick],
-        gs: GroupState[graft.ta.rec.Kernel]
-    ): Iterator[KernelOut] = {
-      val kernel = gs.getOption.getOrElse {
-        val k = make()
-        k.init(barSchema)
-        k.reset()
-        k
-      }
-      val out = rows.toSeq.sortBy(_.ts).map { t =>
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume),
-          barSchema
-        )
-        // KernelOut carries Option[Double] — numeric kernel outputs only
-        // (every REC kernel emits Double/Long/Int; booleans map to 0/1).
-        // A kernel with a genuinely non-numeric output column needs the
-        // typed kernelBatchStream path instead — fail loudly, don't parse.
-        val vals = kernel.update(row).map {
-          case null => None
-          case d: Double => Some(d)
-          case i: Int => Some(i.toDouble)
-          case l: Long => Some(l.toDouble)
-          case b: Boolean => Some(if (b) 1.0 else 0.0)
-          case other =>
-            throw new IllegalArgumentException(
-              s"kernelStream supports numeric outputs only; got ${other.getClass.getSimpleName} — use kernelBatchStream"
-            )
-        }
-        KernelOut(key, t.ts, vals.toSeq)
-      }
-      gs.update(kernel)
-      out.iterator
-    }
-
-    val ttl = idleTtlMs(spark)
-    ticks
-      .groupByKey(_.series_id)
-      .flatMapGroupsWithState(OutputMode.Append(), idleTimeout(ttl))(withIdleTtl(ttl)(step))
-  }
-
-  // ------------------------------------------------- streaming staging
+  // ------------------------------------------------- streaming stages
   /** Per-key state machine producing, tick by tick, the columns a batch
-    * lowering produces row by row: a kind's outputs ([[windowStream]]) or
-    * a REC kernel's staged inputs ([[recStream]]). [[LoweringStage]] is
-    * the one implementation besides [[NoStage]]. */
+    * lowering produces row by row ([[windowStream]]). [[LoweringStage]]
+    * is the one implementation. */
   trait StreamStage extends Serializable {
     def fields: Seq[org.apache.spark.sql.types.StructField]
     def update(t: BarTick): Array[Any]
@@ -257,44 +181,22 @@ object StreamingTa {
     def rearm(fresh: () => StreamStage): Unit = ()
   }
 
-  object NoStage extends StreamStage {
-    val fields: Seq[org.apache.spark.sql.types.StructField] = Nil
-    def update(t: BarTick): Array[Any] = Array.empty
-  }
-
   private def dblField(name: String) =
     org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.DoubleType)
 
-  /** Pass-through kernel: re-emits its staged columns as outputs, so a
-    * stepped column lowering rides kernelBatchStream exactly like a REC
-    * kernel. */
-  private final class StagePass(names: Seq[String]) extends graft.ta.rec.Kernel {
-    private var idx: Array[Int] = _
-    def init(schema: org.apache.spark.sql.types.StructType): Unit =
-      idx = names.map(schema.fieldIndex).toArray
-    def reset(): Unit = ()
-    def update(row: org.apache.spark.sql.Row): Array[Any] = {
-      val out = new Array[Any](idx.length)
-      var i = 0
-      while (i < idx.length) { out(i) = row.get(idx(i)); i += 1 }
-      out
-    }
-  }
-
   /** The EXACT set of registry kinds with a streaming twin, computed
-    * from the live dispatchers ([[windowStream]] for the column
-    * lowerings, [[recStream]] for the REC kernel lowerings — cusum probed
-    * with trained μ/σ since only its fixed-reference mode is causal).
-    * This is the coverage CONTRACT: StreamingCoverageSpec pins it to a
-    * declared list, so a future registry kind that silently doesn't
-    * stream — or a new stream path that forgets to declare itself —
-    * fails the gate. The README streaming table is this same set. */
+    * from the live dispatcher ([[windowStream]] — cusum probed with
+    * trained μ/σ since only its fixed-reference mode is causal). This is
+    * the coverage CONTRACT: StreamingCoverageSpec pins it to a declared
+    * list, so a future registry kind that silently doesn't stream — or a
+    * new stream path that forgets to declare itself — fails the gate.
+    * The README streaming table is this same set. */
   def streamableKinds: Set[String] =
     graft.ta.registry.indicators.filter { k =>
       val spec =
         if (k == "cusum") graft.ta.IndicatorSpec(k, Map("mu" -> 0.0, "sd" -> 1.0))
         else graft.ta.IndicatorSpec(k)
-      windowStream(spec).isDefined || recStream(spec).isDefined
+      windowStream(spec).isDefined
     }.toSet
 
   /** Streamable form of any kind with a column lowering whose analyzed
@@ -303,40 +205,20 @@ object StreamingTa {
     * stage emits exactly the columns `registry(df, spec)` adds, computed
     * by the same bound expression trees, so the stream equals the batch
     * route row for row. Needs an active SparkSession (the analyzer). */
-  def windowStream(spec: graft.ta.IndicatorSpec): Option[StreamKernel] =
+  def windowStream(spec: graft.ta.IndicatorSpec): Option[StreamTwin] =
     if (graft.ta.StrategyCompiler.compile(spec).isEmpty) None
-    else LoweringStep.columns(spec).map { p =>
-      StreamKernel(p.fields, () => new StagePass(p.fields.map(_.name)), () => new LoweringStage(p))
-    }
+    else LoweringStep.columns(spec).map(p => StreamTwin(p.fields, () => new LoweringStage(p)))
 
-  /** One streamable REC kernel: output schema, kernel factory, staging
-    * factory (NoStage for kernels that read raw OHLCV only). */
-  case class StreamKernel(
+  /** The streaming twin of one or more specs' lowering: output schema and
+    * per-series stage factory. */
+  case class StreamTwin(
       outs: Seq[org.apache.spark.sql.types.StructField],
-      make: () => graft.ta.rec.Kernel,
-      stage: () => StreamStage = () => NoStage
+      stage: () => StreamStage
   )
 
-  /** Streamable form of any REC registry kind: schema + kernel from the
-    * batch lowering (StrategyCompiler.compileRec), its staging levels
-    * stepped by a [[LoweringStage]] exactly as for [[windowStream]]. */
-  def recStream(spec: graft.ta.IndicatorSpec): Option[StreamKernel] =
-    graft.ta.StrategyCompiler.compileRec(spec).flatMap { rp =>
-      if (rp.staging.isEmpty) Some(StreamKernel(rp.outs, rp.make))
-      else LoweringStep.staging(spec, rp.staging).map(p => StreamKernel(rp.outs, rp.make, () => new LoweringStage(p)))
-    }
-
-
-  /** Stream SEVERAL REC kernels over one tick stream in a single
-    * stateful pass — the streaming counterpart of rec.perSeriesBatch:
-    * one groupByKey/state entry per series carries ALL kernels (plus
-    * their staging machines), and each tick emits one TYPED row
-    * (series_id, ts, outs…) with each column in the kernel's declared
-    * StructField type — exactly the batch perSeriesBatch schema. */
   /** Stream an ENTIRE Strategy in one stateful pass — the streaming twin
-    * of `registry.strategy`: the specs with a column lowering step their
-    * merged batch plan in ONE [[LoweringStage]], REC-only specs
-    * ([[recStream]]) add a kernel each, and all ride a single
+    * of `registry.strategy`: every causal spec steps the strategy's
+    * merged batch plan in ONE [[LoweringStage]], riding a single
     * [[kernelBatchStream]] flatMapGroupsWithState — one shuffle, one
     * state entry per series carrying every indicator's O(1) state.
     * Throws on a spec with no streaming twin (the [[streamableKinds]]
@@ -353,7 +235,7 @@ object StreamingTa {
     * whose lookahead cells batch leaves non-null). Causal-only
     * strategies keep today's immediate emission; per-series state adds
     * O(K × row width) for the pending ring. Warm-start
-    * ([[strategyStreamWarm]]) composes too (round 13): causal kernels
+    * ([[strategyStreamWarm]]) composes too (round 13): causal stages
     * fold from history and the pending ring is primed with the last
     * Kmax history rows via [[bootstrapMixedState]].
     *
@@ -363,7 +245,7 @@ object StreamingTa {
     * write with one definition (atr's and natr's true_range) is emitted
     * once; a Strategy that repeats a spec, or defines one name two ways
     * (dm's and adx's dmp_n), is rejected with "duplicate output columns".
-    * Columns come in spec order, REC-only specs' after the rest. */
+    * Columns come in spec order. */
   def strategyStream(
       ticks: Dataset[BarTick],
       st: graft.ta.Strategy,
@@ -378,8 +260,7 @@ object StreamingTa {
   /** WARM-START strategyStream: bootstrap every series' state from BATCH
     * history instead of replaying it through micro-batches. The history
     * fold is one shuffle (hash on series_id) + a sorted per-partition
-    * sequential pass through the SAME kernel/stage objects the stream
-    * uses, so the state handed to the first micro-batch is bit-identical
+    * sequential pass through the SAME stage objects the stream uses, so the state handed to the first micro-batch is bit-identical
     * to what replaying the history tick-by-tick would have produced
     * (StreamingBootstrapSpec) — but it runs at batch speed with
     * full-cluster parallelism and sort-spill, which at 100 TB of history
@@ -396,7 +277,7 @@ object StreamingTa {
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None
   ): DataFrame =
     if (st.ta.exists(lookStream(_).isDefined)) {
-      // MIXED warm-start (round 13): causal kernels fold from history as
+      // MIXED warm-start (round 13): causal stages fold from history as
       // in the causal path, and each lookahead pending ring is primed
       // with the last Kmax history rows — exactly the rows whose
       // lookahead cells are still open at the boundary. The first live
@@ -531,8 +412,8 @@ object StreamingTa {
     }
   }
 
-  /** Per-series state for the latency-K mixed mode: the causal
-    * kernel/stage entries + the lookahead state machines + the pending
+  /** Per-series state for the latency-K mixed mode: the causal stage
+    * entries + the lookahead state machines + the pending
     * ring of not-yet-complete output rows (ts + values, width = the
     * full output row). */
   case class MixedKernelState(
@@ -540,7 +421,7 @@ object StreamingTa {
       lateDropped: Long,
       cnt: Long,
       pn: Int,
-      entries: Array[(graft.ta.rec.Kernel, StreamStage)],
+      entries: Array[StreamStage],
       looks: Array[LookStage],
       pts: Array[Long],
       pvals: Array[Array[Any]]
@@ -560,21 +441,19 @@ object StreamingTa {
     * [[strategyStreamLookahead]] (the live stateful pass) and
     * [[bootstrapMixedState]] (the batch history fold), so the state the
     * warm path hands to the first micro-batch is built by the SAME
-    * kernels/stages/offsets the stream folds with. */
+    * stages/offsets the stream folds with. */
   private case class MixedCompiled(
-      causal: Seq[StreamKernel],
+      causal: Seq[StreamTwin],
       lookMk: Seq[() => LookStage],
       totalW: Int,
       causalPos: Seq[Array[Int]],
       lookOff: Seq[Int],
       allFields: Seq[org.apache.spark.sql.types.StructField],
       kmax: Int,
-      pcap: Int,
-      extSchemas: Seq[org.apache.spark.sql.types.StructType]
+      pcap: Int
   ) extends Serializable
 
   private def compileMixed(st: graft.ta.Strategy): MixedCompiled = {
-    import org.apache.spark.sql.types.StructType
     val (causal, specNames) = compileCausal(st, st.ta.filter(lookStream(_).isEmpty))
     val lookMk: Seq[() => LookStage] = st.ta.flatMap(lookStream)
     // column layout in strategy order: a spec's columns where it stands
@@ -593,8 +472,7 @@ object StreamingTa {
     val lookOff = perSpec.zipWithIndex.collect { case (Right(_), i) => offsets(i) }
     val causalPos = causal.map(_.outs.map(f => outNames.indexOf(f.name)).toArray)
     val kmax = lookMk.map(_().k).max
-    val extSchemas = causal.map(sp => StructType(barSchema.fields ++ sp.stage().fields))
-    MixedCompiled(causal, lookMk, allFields.length, causalPos, lookOff, allFields, kmax, kmax + 1, extSchemas)
+    MixedCompiled(causal, lookMk, allFields.length, causalPos, lookOff, allFields, kmax, kmax + 1)
   }
 
   /** One tick of the latency-K fold: row `cnt`'s causal and lookahead
@@ -602,7 +480,7 @@ object StreamingTa {
     * its deferred cells k ticks back; returns the pending count. */
   private def mixedTick(
       mc: MixedCompiled,
-      entries: Array[(graft.ta.rec.Kernel, StreamStage)],
+      entries: Array[StreamStage],
       looks: Array[LookStage],
       pts: Array[Long],
       pvals: Array[Array[Any]],
@@ -611,12 +489,9 @@ object StreamingTa {
       t: BarTick
   ): Int = {
     val vals = new Array[Any](mc.totalW)
-    val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
     var ci = 0
     while (ci < entries.length) {
-      val (k, stg) = entries(ci)
-      val out = k.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        base ++ stg.update(t), mc.extSchemas(ci)))
+      val out = entries(ci).update(t)
       val pos = mc.causalPos(ci)
       var j = 0
       while (j < out.length) { vals(pos(j)) = out(j); j += 1 }
@@ -656,7 +531,7 @@ object StreamingTa {
     import org.apache.spark.sql.{Encoder, Encoders, Row}
     val mc = compileMixed(st)
     val causal = mc.causal; val lookMk = mc.lookMk
-    val kmax = mc.kmax; val pcap = mc.pcap; val extSchemas = mc.extSchemas
+    val kmax = mc.kmax; val pcap = mc.pcap
     val outSchema = StructType(
       StructField("series_id", StringType) +: StructField("ts", LongType) +: mc.allFields)
 
@@ -687,15 +562,12 @@ object StreamingTa {
                 s"${causal.length} + ${lookMk.length} — the strategy changed across a " +
                 "checkpoint restart; drain and restart cold instead")
           var i = 0
-          while (i < s.entries.length) { s.entries(i)._2.rearm(causal(i).stage); i += 1 }
+          while (i < s.entries.length) { s.entries(i).rearm(causal(i).stage); i += 1 }
           s
         case None =>
           MixedKernelState(
             Long.MinValue, 0L, 0L, 0,
-            causal.zip(extSchemas).map { case (sp, es) =>
-              val k = sp.make(); k.init(es); k.reset()
-              (k, sp.stage())
-            }.toArray,
+            causal.map(_.stage()).toArray,
             lookMk.map(_()).toArray,
             new Array[Long](pcap),
             new Array[Array[Any]](pcap))
@@ -743,7 +615,7 @@ object StreamingTa {
   /** Fold BATCH history into per-series MIXED (causal + lookahead) state
     * (round-13 verdict item #4: warm-start no longer refuses lookahead
     * strategies). Same shape as [[bootstrapState]] — one shuffle, sorted
-    * per-partition sequential pass through the SAME kernel/stage/LookStage
+    * per-partition sequential pass through the SAME stage/LookStage
     * objects the stream uses — plus the latency-K machinery: every
     * history row folds through the lookahead stages (update + backfill)
     * and lands in the pending ring; a row whose lookahead cells history
@@ -771,10 +643,7 @@ object StreamingTa {
           def hasNext: Boolean = cur != null
           def next(): (String, MixedKernelState) = {
             val key = cur.series_id
-            val entries = mc.causal.zip(mc.extSchemas).map { case (sp, es) =>
-              val k = sp.make(); k.init(es); k.reset()
-              (k, sp.stage())
-            }.toArray
+            val entries = mc.causal.map(_.stage()).toArray
             val looks = mc.lookMk.map(_()).toArray
             val pts = new Array[Long](mc.pcap)
             val pvals = new Array[Array[Any]](mc.pcap)
@@ -798,11 +667,11 @@ object StreamingTa {
       }
   }
 
-  /** Resolve ONE causal spec to its StreamKernel, with the no-twin
+  /** Resolve ONE causal spec to its StreamTwin, with the no-twin
     * diagnostics (factored from [[compileStrategy]] so the mixed path
     * shares them). */
-  private def compileOne(st: graft.ta.Strategy, s: graft.ta.IndicatorSpec): StreamKernel =
-    windowStream(s).orElse(recStream(s)).getOrElse {
+  private def compileOne(st: graft.ta.Strategy, s: graft.ta.IndicatorSpec): StreamTwin =
+    windowStream(s).getOrElse {
       val hint = s.kind match {
         case "ichimoku" | "dpo" =>
           " — it reads the future; use strategyStream/strategyStreamWarm, which " +
@@ -825,48 +694,43 @@ object StreamingTa {
   /** Resolve causal specs. A name several specs write with one definition
     * (atr's and natr's `true_range`) is emitted once, by the first; a
     * repeated spec, or a name defined two ways, is rejected. Every spec
-    * with a column lowering rides ONE stage, stepping the specs' merged
-    * batch plan (shared rings, folds and levels; its columns in spec
-    * order); REC-only specs keep a kernel each, after it. Returns the
-    * kernels and the names each spec emits. */
+    * rides ONE stage stepping the specs' merged batch plan (shared rings,
+    * folds and levels; its columns in spec order). Returns that stage
+    * (none for no specs) and the names each spec emits. */
   private def compileCausal(
       st: graft.ta.Strategy,
       specs: Seq[graft.ta.IndicatorSpec]
-  ): (Seq[StreamKernel], Seq[Seq[String]]) = {
+  ): (Seq[StreamTwin], Seq[Seq[String]]) = {
     val repeated = specs.diff(specs.distinct).flatMap(compileOne(st, _).outs.map(_.name))
     val seen = scala.collection.mutable.Map.empty[String, String]
     val clash = scala.collection.mutable.LinkedHashSet.empty[String] ++ repeated
-    val sks = specs.map { s =>
-      val sk = compileOne(st, s)
-      // a column lowering's definitions, unless post-kwargs rewrite them
+    val names = specs.map { s =>
+      // a lowering's definitions, unless post-kwargs rewrite them
       val defs: Map[String, String] =
-        if (Seq("offset", "fillna", "prefix", "suffix").exists(s.params.contains) || windowStream(s).isEmpty) Map.empty
+        if (Seq("offset", "fillna", "prefix", "suffix").exists(s.params.contains)) Map.empty
         else graft.ta.StrategyCompiler.compile(s).fold(Map.empty[String, String])(_.levels.flatten.map {
           case (n, c) => n -> c.toString
         }.toMap)
-      val kept = sk.outs.filter { f =>
-        val d = defs.getOrElse(f.name, s"$s")
-        seen.get(f.name) match {
-          case None => seen(f.name) = d; true
-          case Some(d0) => if (d0 != d || !defs.contains(f.name)) clash += f.name; false
+      compileOne(st, s).outs.map(_.name).filter { n =>
+        val d = defs.getOrElse(n, s"$s")
+        seen.get(n) match {
+          case None => seen(n) = d; true
+          case Some(d0) => if (d0 != d || !defs.contains(n)) clash += n; false
         }
       }
-      sk.copy(outs = kept)
     }
     require(
       clash.isEmpty,
       s"strategy '${st.name}': duplicate output columns across specs: ${clash.mkString(", ")}")
-    val (cols, recs) = specs.zip(sks).partition { case (s, _) => windowStream(s).isDefined }
-    val names = cols.flatMap(_._2.outs.map(_.name))
-    val fused = if (cols.isEmpty) None else {
-      val p = LoweringStep.strategy(cols.map(_._1), names).getOrElse(throw new IllegalArgumentException(
-        s"strategy '${st.name}': the merged lowering of ${cols.map(_._1.kind).mkString(", ")} does not step"))
-      Some(StreamKernel(p.fields, () => new StagePass(names), () => new LoweringStage(p)))
+    val fused = if (specs.isEmpty) None else {
+      val p = LoweringStep.strategy(specs, names.flatten).getOrElse(throw new IllegalArgumentException(
+        s"strategy '${st.name}': the merged lowering of ${specs.map(_.kind).mkString(", ")} does not step"))
+      Some(StreamTwin(p.fields, () => new LoweringStage(p)))
     }
-    (fused.toSeq ++ recs.map(_._2), sks.map(_.outs.map(_.name)))
+    (fused.toSeq, names)
   }
 
-  private def compileStrategy(st: graft.ta.Strategy): Seq[StreamKernel] = compileCausal(st, st.ta)._1
+  private def compileStrategy(st: graft.ta.Strategy): Seq[StreamTwin] = compileCausal(st, st.ta)._1
 
   /** Fold BATCH history into per-series streaming state (the step function
     * minus emission): repartition by series, sort within partitions, one
@@ -874,11 +738,9 @@ object StreamingTa {
     * `initialState` (or use [[strategyStreamWarm]]). */
   def bootstrapState(
       history: Dataset[BarTick],
-      specs: Seq[StreamKernel]
+      specs: Seq[StreamTwin]
   ): Dataset[(String, BatchKernelState)] = {
-    import org.apache.spark.sql.types.StructType
     import org.apache.spark.sql.{Encoder, Encoders}
-    val extSchemas = specs.map(sp => StructType(barSchema.fields ++ sp.stage().fields))
     implicit val outEnc: Encoder[(String, BatchKernelState)] =
       Encoders.tuple(Encoders.STRING, Encoders.kryo[BatchKernelState])
     history
@@ -890,16 +752,13 @@ object StreamingTa {
           def hasNext: Boolean = cur != null
           def next(): (String, BatchKernelState) = {
             val key = cur.series_id
-            val entries = specs.zip(extSchemas).map { case (sp, es) =>
-              val k = sp.make(); k.init(es); k.reset()
-              (k, sp.stage())
-            }.toArray
+            val entries = specs.map(_.stage()).toArray
             var lastTs = Long.MinValue
             var done = false
             while (!done) {
               val t = cur
               lastTs = t.ts
-              foldTick(entries, extSchemas, t)
+              foldTick(entries, t)
               if (it.hasNext) { cur = it.next(); if (cur.series_id != key) done = true }
               else { cur = null; done = true }
             }
@@ -909,30 +768,21 @@ object StreamingTa {
       }
   }
 
-  /** One tick through every (kernel, stage) entry: each kernel reads the
-    * bar plus its stage's columns; returns the kernels' outputs in order. */
-  private def foldTick(
-      entries: Array[(graft.ta.rec.Kernel, StreamStage)],
-      extSchemas: Seq[org.apache.spark.sql.types.StructType],
-      t: BarTick
-  ): Array[Any] = {
-    val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
-    entries.zip(extSchemas).flatMap { case ((k, stg), es) =>
-      k.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(base ++ stg.update(t), es))
-    }
-  }
+  /** One tick through every stage; returns their outputs in order. */
+  private def foldTick(entries: Array[StreamStage], t: BarTick): Array[Any] =
+    entries.flatMap(_.update(t))
 
-  /** Per-series state for [[kernelBatchStream]]: the kernel/stage entries
+  /** Per-series state for [[kernelBatchStream]]: the stage entries
     * plus the ENFORCED in-order watermark — `lastTs` is the highest tick ts
     * folded so far, `lateDropped` counts cross-batch late ticks dropped for
     * this series (policy "drop"). */
   case class BatchKernelState(
       lastTs: Long,
       lateDropped: Long,
-      entries: Array[(graft.ta.rec.Kernel, StreamStage)]
+      entries: Array[StreamStage]
   )
 
-  /** Run many streaming kernels in ONE stateful pass (one shuffle, one state
+  /** Run many streaming stages in ONE stateful pass (one shuffle, one state
     * entry per series).
     *
     * IN-ORDER CONTRACT (enforced, not prose): within a micro-batch ticks are
@@ -949,7 +799,7 @@ object StreamingTa {
     *    for feeds where a late tick means the upstream log is broken. */
   def kernelBatchStream(
       ticks: Dataset[BarTick],
-      specs: Seq[StreamKernel],
+      specs: Seq[StreamTwin],
       latePolicy: String = "",
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       initialState: Option[Dataset[(String, BatchKernelState)]] = None
@@ -959,9 +809,6 @@ object StreamingTa {
     val outSchema = StructType(
       StructField("series_id", StringType) +: StructField("ts", LongType) +: specs.flatMap(_.outs)
     )
-    // schema each kernel's init() resolves field indexes against: the bar
-    // columns plus that kernel's staged columns
-    val extSchemas = specs.map(sp => StructType(barSchema.fields ++ sp.stage().fields))
     val spark = ticks.sparkSession
     import spark.implicits._
     implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
@@ -985,26 +832,19 @@ object StreamingTa {
         case Some(s) =>
           // a checkpoint carrying a different spec count means the query
           // was redeployed with a CHANGED strategy against old state —
-          // folding would misalign kernels silently; the restart contract
+          // folding would misalign stages silently; the restart contract
           // (SCALING.md) requires drain + warm-start instead
           if (s.entries.length != specs.length)
             throw new IllegalStateException(
-              s"restored state for series '$key' has ${s.entries.length} kernel entries " +
+              s"restored state for series '$key' has ${s.entries.length} stage entries " +
                 s"but the query declares ${specs.length} specs — the strategy changed " +
                 "across a checkpoint restart; drain and warm-start instead")
           // re-attach @transient evaluator machinery dropped by the state
-          // encoder (no-op for most stages)
+          // encoder
           var i = 0
-          while (i < s.entries.length) { s.entries(i)._2.rearm(specs(i).stage); i += 1 }
+          while (i < s.entries.length) { s.entries(i).rearm(specs(i).stage); i += 1 }
           s
-        case None =>
-          BatchKernelState(
-            Long.MinValue,
-            0L,
-            specs.zip(extSchemas).map { case (sp, es) =>
-              val k = sp.make(); k.init(es); k.reset()
-              (k, sp.stage())
-            }.toArray)
+        case None => BatchKernelState(Long.MinValue, 0L, specs.map(_.stage()).toArray)
       }
       val state = st0.entries
       val out = rows.toSeq.sortBy(_.ts).flatMap { t =>
@@ -1021,7 +861,7 @@ object StreamingTa {
         } else {
           st0 = st0.copy(lastTs = t.ts)
           Some(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            Array[Any](t.series_id, t.ts) ++ foldTick(state, extSchemas, t),
+            Array[Any](t.series_id, t.ts) ++ foldTick(state, t),
             outSchema
           ): Row)
         }
@@ -1053,7 +893,7 @@ object StreamingTa {
     * serves live ticks against the FIXED trained stats — μ/σ drift after
     * the training cut is what the monitor is FOR. Live rows equal a batch
     * fixed-ref cusum run over history+live with the same per-series stats
-    * (CusumServeSpec). Per-series state: (sp, sn, lastTs); stats ride a
+    * (CusumServeSpec). Per-series state: the fold buffer and lastTs; stats ride a
     * broadcast keyed by series (keys-sized — guarded by `maxSeries`,
     * COUNTED BEFORE the collect so an over-limit key space fails loudly
     * instead of materializing on the driver). The default ceiling of 1M
@@ -1070,6 +910,7 @@ object StreamingTa {
   ): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
     val spark = ticks.sparkSession
     import spark.implicits._
     val statsDf = history
@@ -1091,16 +932,15 @@ object StreamingTa {
     }.toMap
     val bStats = spark.sparkContext.broadcast(stats)
 
-    // the batch kernel itself, fed the trained stats as its __mu/__sd
-    // columns (null stats or σ = 0 emit nulls, as in batch)
-    val inSchema = StructType(Seq(
-      StructField("close", DoubleType), StructField("__mu", DoubleType), StructField("__sd", DoubleType)))
-    def kernel(): graft.ta.rec.Kernel = { val c = new graft.ta.rec.Cusum(k, h); c.init(inSchema); c.reset(); c }
-    def serve(kern: graft.ta.rec.Kernel, key: String, t: BarTick): Array[Any] = {
+    // the batch fold itself, stepped over (close, μ, σ) with the trained
+    // stats (null stats or σ = 0 emit nulls, as in batch)
+    val in = Seq("close", "mu", "sd").map(n => AttributeReference(n, DoubleType)())
+    val p = LoweringStep.fold(graft.functions.RecFolds.CusumFold(in(0), in(1), in(2), k, h), in)
+    def serve(stage: LoweringStage, key: String, t: BarTick): Array[Any] = {
       val (mu, sd) = bStats.value.getOrElse(key, (null, null))
-      kern.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(Array[Any](t.close, mu, sd), inSchema))
+      stage.update(new GenericInternalRow(Array[Any](t.close, mu, sd)))
     }
-    case class CuSt(lastTs: Long, kern: graft.ta.rec.Kernel)
+    case class CuSt(lastTs: Long, stage: LoweringStage)
     implicit val stEnc: Encoder[CuSt] = Encoders.kryo[CuSt]
     implicit val warmEnc: Encoder[(String, CuSt)] =
       Encoders.tuple(Encoders.STRING, Encoders.kryo[CuSt])
@@ -1115,16 +955,16 @@ object StreamingTa {
           def hasNext: Boolean = cur != null
           def next(): (String, CuSt) = {
             val key = cur.series_id
-            val kern = kernel()
+            val stage = new LoweringStage(p)
             var lastTs = Long.MinValue
             var done = false
             while (!done) {
               lastTs = cur.ts
-              serve(kern, key, cur)
+              serve(stage, key, cur)
               if (it.hasNext) { cur = it.next(); if (cur.series_id != key) done = true }
               else { cur = null; done = true }
             }
-            (key, CuSt(lastTs, kern))
+            (key, CuSt(lastTs, stage))
           }
         }
       }
@@ -1136,17 +976,18 @@ object StreamingTa {
     implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
 
     def step(key: String, it: Iterator[BarTick], gs: GroupState[CuSt]): Iterator[Row] = {
-      val st0 = gs.getOption.getOrElse(CuSt(Long.MinValue, kernel()))
+      val st0 = gs.getOption.getOrElse(CuSt(Long.MinValue, new LoweringStage(p)))
+      st0.stage.rearm(() => new LoweringStage(p))
       var lastTs = st0.lastTs
       val out = scala.collection.mutable.ArrayBuffer.empty[Row]
       it.toSeq.sortBy(_.ts).foreach { t =>
         if (t.ts > lastTs) {
           lastTs = t.ts
           out += new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            Array[Any](key, t.ts) ++ serve(st0.kern, key, t), outSchema)
+            Array[Any](key, t.ts) ++ serve(st0.stage, key, t), outSchema)
         }
       }
-      gs.update(CuSt(lastTs, st0.kern))
+      gs.update(CuSt(lastTs, st0.stage))
       out.iterator
     }
 
@@ -1864,7 +1705,7 @@ object StreamingTa {
     * conditional-sum column per bucket (single aggregate — append-mode
     * legal), PSI assembled map-side from the counts; alert at the
     * standard 0.25 cut. The streaming complement to the retrospective
-    * x_psi and the per-series rec.Cusum: distribution-level drift,
+    * x_psi and the per-series cusum: distribution-level drift,
     * online. Batch parity: the same function on a static frame is the
     * oracle (StreamingParitySpec). */
   def psiStream(

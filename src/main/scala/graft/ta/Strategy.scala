@@ -110,28 +110,14 @@ object registry {
   }
 
   /** True when the spec has a StrategyCompiler lowering (test hook). */
-  def hasLowering(spec: IndicatorSpec): Boolean =
-    StrategyCompiler.compile(spec).isDefined || StrategyCompiler.compileRec(spec).isDefined
-
-  /** REC lowering surface for streaming and tests: (batch staging
-    * transform — the same leveled columns runAll stages, temps kept
-    * because the kernel reads them —, output schema, kernel factory). */
-  def recKernel(spec: IndicatorSpec): Option[
-    (DataFrame => DataFrame, Seq[org.apache.spark.sql.types.StructField], () => rec.Kernel)
-  ] =
-    StrategyCompiler.compileRec(spec).map { rp =>
-      val stage = (df: DataFrame) =>
-        rp.staging.foldLeft(df.withColumn("__rn", prim.rn)) { (d, lvl) =>
-          d.withColumns(lvl.toMap)
-        }
-      (stage, rp.outs, rp.make)
-    }
+  def hasLowering(spec: IndicatorSpec): Boolean = StrategyCompiler.compile(spec).isDefined
 
   /** Compile and run a whole Strategy — one lazy plan, no process pool:
     * the specs' lowerings merge into a handful of projection levels
     * (driver-side compile cost stops scaling with indicator count × plan
-    * size — see StrategyCompiler) and every REC kernel shares one pass.
-    * Output columns are identical to folding `apply` over every spec. */
+    * size — see StrategyCompiler), REC state machines included: they are
+    * window folds like the rest. Output columns are identical to folding
+    * `apply` over every spec. */
   def strategy(df: DataFrame, st: Strategy): DataFrame = {
     // Prepared-statement semantics, two memos deep. The analyzed plan
     // depends only on the specs, the input schema and the analyzer's

@@ -2,14 +2,14 @@ package graft.ta
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
 import prim._
 
 /** The single definition of every registry kind. Each IndicatorSpec
   * lowers to a LEVELED column plan (each level's columns reference only
-  * base columns and earlier levels) or to a REC kernel with staged
-  * inputs; `df.ta.<kind>(…)`, `registry(df, spec)` and `registry.strategy`
-  * all run these plans through [[run]].
+  * base columns and earlier levels); `df.ta.<kind>(…)`,
+  * `registry(df, spec)` and `registry.strategy` all run these plans
+  * through [[run]]. The one kind that needs a whole-series aggregate
+  * first, retrospective cusum, joins it on and then runs its plan.
   *
   * A batch merges every spec level-by-level into ONE projection per level
   * and analyzes the stack once: the naive fold applies ~150 `withColumn`s,
@@ -162,6 +162,15 @@ private[graft] object StrategyCompiler {
 
   private def one(out: String, c: Column): ColPlan = ColPlan(Seq(Seq(out -> c)), Nil)
 
+  /** cusum of `x` standardized by `mu`/`sd` — literals, or the per-series
+    * columns retrospective cusum joins on — in the struct temp `t`. */
+  private def cusumLv(t: String, x: Column, mu: Column, sd: Column, k: Double, h: Double): ColPlan =
+    structFold(
+      t,
+      kfold("graft_cusum_k", x.cast("double"), mu.cast("double"), sd.cast("double"), lit(k), lit(h)),
+      "cusum_pos" -> "pos", "cusum_neg" -> "neg", "cusum_alarm" -> "alarm"
+    )
+
   private def i(p: Map[String, Any], k: String, dflt: Int): Int =
     p.get(k).map(_.toString.toDouble.toInt).getOrElse(dflt)
   private def dd(p: Map[String, Any], k: String, dflt: Double): Double =
@@ -302,9 +311,7 @@ private[graft] object StrategyCompiler {
           "macd" -> "macd", "macds" -> "macds", "macdh" -> "macdh"
         ))
       case "psar" =>
-        // round-9: struct window fold (RecFolds.PsarFold) — shares the
-        // W-class Exchange instead of the mapPartitions re-repartition;
-        // compileRec's kernel lowering remains for the streaming path.
+        // struct window fold (RecFolds.PsarFold): shares the W-class Exchange
         val af0 = dd(p, "af0", 0.02); val afP = dd(p, "af", 0.02); val maxAf = dd(p, "max_af", 0.2)
         Some(structFold(
           tmp("psar", af0, afP, maxAf),
@@ -361,6 +368,14 @@ private[graft] object StrategyCompiler {
       case "rsx" =>
         val n = i(p, "length", 14)
         Some(one(s"rsx_$n", kfold("graft_rsx_k", close.cast("double"), lit(n))))
+      case "jma" =>
+        val n = i(p, "length", 7); val phase = dd(p, "phase", 0.0)
+        Some(one(s"jma_$n", kfold("graft_jma_k", close.cast("double"), lit(n), lit(phase))))
+      case "cusum" if p.contains("mu") && p.contains("sd") =>
+        // fixed reference: the trained μ/σ are literals, so the recursion
+        // is causal and streamable (retrospective mode: [[wholeSeries]])
+        val k = dd(p, "k", 0.5); val h = dd(p, "h", 5.0); val mu = dd(p, "mu", 0.0); val sd = dd(p, "sd", 1.0)
+        Some(cusumLv(xtmp("cusum", k, h, mu, sd), x, lit(mu), lit(sd), k, h))
       case "fisher" =>
         // staged range position + the FisherFold recursion
         val n = i(p, "length", 9)
@@ -1255,147 +1270,43 @@ private[graft] object StrategyCompiler {
     )
   }
 
-  /** A REC kernel spec lowered for the batched pass: staging column
-    * levels, kernel outputs, factory, and staging temps to drop afterwards. */
-  final case class RecPlan(
-      staging: Seq[Level],
-      outs: Seq[StructField],
-      make: () => rec.Kernel,
-      temps: Seq[String]
-  )
-
-  private def dbl(name: String) = StructField(name, DoubleType, nullable = true)
-  private def intF(name: String) = StructField(name, IntegerType, nullable = true)
-  private def longF(name: String) = StructField(name, LongType, nullable = true)
-
-  /** Kernel lowerings (the streaming path's batch twins; jma and
-    * fixed-reference cusum have no column lowering). The kernel-read
-    * staging columns of fisher/td_seq/hilo/qqe keep the names the kernels
-    * and their streaming stages share (`__pos`, `__c4`, `__mh`/`__ml`,
-    * `__rsima`/`__dar`): those kinds have column lowerings, so their
-    * kernels only ever run one to a pass. */
-  def compileRec(spec: IndicatorSpec, src: String = "close"): Option[RecPlan] = {
-    val p = spec.params
-    val x = srcOf(spec, src)
-    def kernel(outs: Seq[StructField], make: () => rec.Kernel, staging: Level = Nil) =
-      Some(RecPlan(if (staging.isEmpty) Nil else Seq(staging), outs, make, staging.map(_._1)))
-    spec.kind match {
-      case "psar" =>
-        val af0 = dd(p, "af0", 0.02); val af = dd(p, "af", 0.02); val maxAf = dd(p, "max_af", 0.2)
-        kernel(
-          Seq(dbl("psar_long"), dbl("psar_short"), dbl("psar_af"), intF("psar_reversal")),
-          () => new rec.Psar(af0, af, maxAf)
-        )
-      case "supertrend" =>
-        val n = i(p, "length", 7); val mult = dd(p, "multiplier", 3.0)
-        kernel(
-          Seq(dbl(s"supert_$n"), intF(s"supertd_$n"), dbl(s"supertl_$n"), dbl(s"superts_$n")),
-          () => new rec.Supertrend(n, mult)
-        )
-      case "ha" =>
-        kernel(Seq(dbl("ha_open"), dbl("ha_high"), dbl("ha_low"), dbl("ha_close")), () => new rec.HeikinAshi)
-      case "mcgd" =>
-        val n = i(p, "length", 10)
-        kernel(Seq(dbl(s"mcgd_$n")), () => new rec.Mcgd(n, x))
-      case "kalman" =>
-        val q = dd(p, "q", 0.01); val r = dd(p, "r", 1.0)
-        kernel(Seq(dbl("kf"), dbl("kf_gain")), () => new rec.Kalman(q, r, x))
-      // Fixed-reference CUSUM: the trained μ/σ are kernel literals, so the
-      // recursion is causal and streamable. Retrospective mode (no mu/sd)
-      // needs a whole-series aggregate first — see [[wholeSeries]].
-      case "cusum" if p.contains("mu") && p.contains("sd") =>
-        val kk = dd(p, "k", 0.5); val hh = dd(p, "h", 5.0)
-        val ref = Some((dd(p, "mu", 0.0), dd(p, "sd", 1.0)))
-        kernel(Seq(dbl("cusum_pos"), dbl("cusum_neg"), longF("cusum_alarm")), () => new rec.Cusum(kk, hh, x, ref))
-      case "ssf" =>
-        val n = i(p, "length", 10)
-        kernel(Seq(dbl(s"ssf_$n")), () => new rec.Ssf(n, x))
-      case "hwma" =>
-        val na = dd(p, "na", 0.2); val nb = dd(p, "nb", 0.1); val nc = dd(p, "nc", 0.1)
-        kernel(Seq(dbl("hwma")), () => new rec.Hwma(na, nb, nc, x))
-      case "rsx" =>
-        val n = i(p, "length", 14)
-        kernel(Seq(dbl(s"rsx_$n")), () => new rec.Rsx(n))
-      case "ebsw" =>
-        val n = i(p, "length", 40); val bars = i(p, "bars", 10)
-        kernel(Seq(dbl(s"ebsw_$n")), () => new rec.Ebsw(n, bars))
-      case "hwc" =>
-        val na = dd(p, "na", 0.2); val nb = dd(p, "nb", 0.1); val nc = dd(p, "nc", 0.1)
-        val nd = dd(p, "nd", 0.1); val k = dd(p, "k", 1.0)
-        kernel(Seq(dbl("hwc_mid"), dbl("hwc_upper"), dbl("hwc_lower")), () => new rec.Hwc(na, nb, nc, nd, k))
-      case "jma" =>
-        val n = i(p, "length", 7); val phase = dd(p, "phase", 0.0)
-        kernel(Seq(dbl(s"jma_$n")), () => new rec.Jma(n, phase))
-      case "fisher" =>
-        val n = i(p, "length", 9)
-        kernel(Seq(dbl(s"fisher_$n"), dbl(s"fisher_signal_$n")), () => new rec.Fisher, Seq("__pos" -> fisherPos(n)))
-      case "td_seq" =>
-        kernel(Seq(longF("td_seq_up"), longF("td_seq_dn")), () => new rec.TdSeq, Seq("__c4" -> shift(close, 4)))
-      case "hilo" =>
-        val hn = i(p, "high_length", 13); val ln = i(p, "low_length", 21)
-        kernel(
-          Seq(dbl("hilo"), dbl("hilo_long"), dbl("hilo_short")),
-          () => new rec.Hilo,
-          Seq("__mh" -> rmean(high, hn), "__ml" -> rmean(low, ln))
-        )
-      case "qqe" =>
-        val n = i(p, "length", 14); val smooth = i(p, "smooth", 5); val factor = dd(p, "factor", 4.236)
-        val (l, t) = qqeLv(n, smooth, factor, "__rsima", "__dar")
-        Some(RecPlan(
-          l,
-          Seq(dbl(s"qqe_$n"), intF(s"qqe_trend_$n"), dbl(s"qqe_long_$n"), dbl(s"qqe_short_$n")),
-          () => new rec.Qqe,
-          t
-        ))
-      case _ => None
-    }
-  }
-
   /** Kinds whose definition needs a whole-series aggregate before any
-    * row is computed, so they run on the frame, not as a plan:
+    * row is computed, so they run on the frame, one spec at a time:
     * retrospective cusum broadcasts the per-series μ/σ (rounded to 6 dp)
     * back onto the rows — NOT causal, so deliberately not streamable —
-    * and the kernel's repartition stays the only full-data shuffle. */
+    * and runs the fixed-reference fold over them. */
   private def wholeSeries(df: DataFrame, spec: IndicatorSpec, src: String): DataFrame = spec.kind match {
     case "cusum" =>
       val x = srcOf(spec, src)
+      val k = dd(spec.params, "k", 0.5); val h = dd(spec.params, "h", 5.0)
       val stats = df
         .groupBy("series_id")
         .agg(round(avg(col(x)), 6).as("__mu"), round(stddev_samp(col(x)), 6).as("__sd"))
-      rec
-        .perSeries(
-          df.join(broadcast(stats), Seq("series_id"), "left"),
-          Seq(dbl("cusum_pos"), dbl("cusum_neg"), longF("cusum_alarm"))
-        )(() => new rec.Cusum(dd(spec.params, "k", 0.5), dd(spec.params, "h", 5.0), x))
-        .drop("__mu", "__sd")
+      runAll(
+        df.join(broadcast(stats), Seq("series_id"), "left"),
+        Seq(cusumLv(tmpName(Seq("cusum_r", k, h, x)), col(x), col("__mu"), col("__sd"), k, h))
+      ).drop("__mu", "__sd")
     case kind => throw new IllegalArgumentException(s"unknown indicator '$kind'")
   }
 
   /** Run specs over df as one batch: whole-series kinds first, then every
-    * column plan merged level by level and every kernel in one pass. */
+    * column plan merged level by level. */
   def run(df: DataFrame, specs: Seq[IndicatorSpec], src: String = "close"): DataFrame = {
-    val lowered = specs.map(s => s -> compile(s, src).toLeft(compileRec(s, src)))
-    runAll(
-      lowered.collect { case (s, Right(None)) => s }.foldLeft(df)(wholeSeries(_, _, src)),
-      lowered.collect { case (_, Left(cp)) => cp },
-      lowered.collect { case (_, Right(Some(rp))) => rp }
-    )
+    val lowered = specs.map(s => s -> compile(s, src))
+    runAll(lowered.collect { case (s, None) => s }.foldLeft(df)(wholeSeries(_, _, src)), lowered.flatMap(_._2))
   }
 
-  /** Column plans merge into one projection per level; REC kernels then
-    * run in ONE batched repartition+sort+mapPartitions pass over their
-    * staged columns. Temps drop as early as possible (column temps before
-    * the kernel shuffle — narrower rows through the exchange). A name
-    * several plans write keeps the LAST plan's definition, as a fold of
-    * the specs would; outputs replace same-named input columns. */
-  def runAll(df: DataFrame, plans: Seq[ColPlan], recPlans: Seq[RecPlan]): DataFrame = {
-    if (plans.isEmpty && recPlans.isEmpty) return df
+  /** Column plans merge into one projection per level. Temps drop at the
+    * end. A name several plans write keeps the LAST plan's definition, as
+    * a fold of the specs would; outputs replace same-named input columns. */
+  def runAll(df: DataFrame, plans: Seq[ColPlan]): DataFrame = {
+    if (plans.isEmpty) return df
     // Last wins across levels: a plan that writes a name an earlier plan
     // wrote deeper, with another expression, shifts down until its
     // definition sits at the earlier one's level (where the per-level
     // dedup below keeps the later plan's).
     val deepest = scala.collection.mutable.Map.empty[String, (Int, String)]
-    val allPlans = (plans ++ recPlans.map(rp => ColPlan(rp.staging, rp.temps))).map { pl =>
+    val allPlans = plans.map { pl =>
       val defs = for ((lv, k) <- pl.levels.zipWithIndex; (n, c) <- lv) yield (n, k, c.toString)
       val pad = (0 +: defs.flatMap { case (n, k, e) => deepest.get(n).collect { case (at, e0) if e0 != e => at - k } }).max
       defs.foreach { case (n, k, e) => deepest(n) = (math.max(k + pad, deepest.get(n).fold(0)(_._1)), e) }
@@ -1442,28 +1353,12 @@ private[graft] object StrategyCompiler {
         names = names ++ appended.map(_._1)
       }
     }
-    var d = B.ofRows(df.sparkSession, plan)
+    val d = B.ofRows(df.sparkSession, plan)
     // a column one plan treats as scratch (e.g. adx's true_range) may be
     // another plan's declared OUTPUT (the atr builder keeps true_range):
     // outputs win, only globally-unclaimed temps are dropped
     val outputs = allPlans.flatMap(pl => pl.levels.flatten.map(_._1).filterNot(pl.temps.contains)).toSet
-    val kernelNeeds = recPlans.flatMap(_.temps).toSet
-    val earlyTemps = ("__rn" +: plans.flatMap(_.temps)).distinct
-      .filterNot(outputs.contains)
-      .filterNot(kernelNeeds.contains)
-    d = d.drop(earlyTemps: _*)
-    if (recPlans.nonEmpty) {
-      // kernel outputs replace same-named columns; an output a later
-      // kernel re-emits is written under a scratch name and dropped
-      val parts = recPlans.zipWithIndex.map { case (rp, j) =>
-        val later = recPlans.drop(j + 1).flatMap(_.outs.map(_.name)).toSet
-        rp.outs.map(o => if (later(o.name)) o.copy(name = s"__shadowed_${j}_${o.name}") else o) -> rp.make
-      }
-      val outNames = parts.flatMap(_._1.map(_.name))
-      d = rec.perSeriesBatch(d.drop(outNames: _*), parts)
-      val lateTemps = recPlans.flatMap(_.temps).distinct.filterNot(outputs.contains)
-      d = d.drop(lateTemps ++ outNames.filter(_.startsWith("__shadowed_")): _*)
-    }
-    d
+    val temps = ("__rn" +: plans.flatMap(_.temps)).distinct.filterNot(outputs.contains)
+    d.drop(temps: _*)
   }
 }

@@ -305,40 +305,38 @@ final class Ta(private val df: DataFrame) {
   /** Positive Volume Index: same on volume-up rows. */
   def pvi(initial: Double = 1000.0): DataFrame = run("pvi")("initial" -> initial)
 
-  // ============================================== REC kernel indicators =====
-  /** Parabolic SAR — rec.Psar for the declared state machine. Round-9:
-    * ONE struct-valued window fold (functions.RecFolds.PsarFold) — the
-    * branching trend/EP/AF recursion lives in the aggregation buffer, so
-    * psar shares the W-class Exchange instead of re-repartitioning
-    * through mapPartitions. The kernel spelling it bit-matches is the
-    * reference in RecFoldSpec (and stays on the streaming path). */
+  // ============================================== REC state machines =====
+  // Each REC kind is ONE window fold (functions.RecFolds): its recursion
+  // lives in the aggregation buffer, so it shares the W-class Exchange,
+  // and streaming steps the same buffer. RecFoldSpec proves every fold
+  // bit-identical to its reference kernel (test scope: RecReference).
+
+  /** Parabolic SAR — struct fold RecFolds.PsarFold: the branching
+    * trend/EP/AF recursion of the declared state machine. */
   def psar(af0: Double = 0.02, afStep: Double = 0.02, maxAf: Double = 0.2): DataFrame =
     run("psar")("af0" -> af0, "af" -> afStep, "max_af" -> maxAf)
 
-  /** Supertrend — rec.Supertrend for the state machine; round-9 fold
-    * (functions.RecFolds.SupertrendFold), same rationale as psar. */
+  /** Supertrend — struct fold RecFolds.SupertrendFold. */
   def supertrend(n: Int = 7, mult: Double = 3.0): DataFrame =
     run("supertrend")("length" -> n, "multiplier" -> mult)
 
-  /** Heikin-Ashi bars — see rec.HeikinAshi. */
+  /** Heikin-Ashi bars — struct fold RecFolds.HaFold. */
   def ha: DataFrame = run("ha")()
 
-  /** McGinley Dynamic — rec.Mcgd; round-9 fold (RecFolds.McgdFold). */
+  /** McGinley Dynamic — fold RecFolds.McgdFold. */
   def mcgd(n: Int = 10, src: String = "close"): DataFrame = run("mcgd", src)("length" -> n)
 
-  /** 1-D Kalman local-level filter — rec.Kalman; round-9 struct fold
-    * (RecFolds.KalmanFold). */
+  /** 1-D Kalman local-level filter — struct fold RecFolds.KalmanFold. */
   def kalman(q: Double = 0.01, r: Double = 1.0, src: String = "close"): DataFrame =
     run("kalman", src)("q" -> q, "r" -> r)
 
-  /** Two-sided CUSUM changepoint detection — see rec.Cusum. Two modes:
-    * with explicit `mu`/`sd` (a trained reference distribution) the
-    * standardization is a pair of literals — causal, streamable
-    * (StreamingTa), Strategy-compilable; without them the per-series μ/σ
-    * are a key-sized aggregate broadcast back onto the big side (full-
-    * series retrospective mode — NOT causal, so deliberately not
-    * streamable), and the kernel's repartition stays the only full-data
-    * shuffle. */
+  /** Two-sided CUSUM changepoint detection — struct fold
+    * RecFolds.CusumFold. Two modes: with explicit `mu`/`sd` (a trained
+    * reference distribution) the standardization is a pair of literals —
+    * causal, streamable (StreamingTa), Strategy-compilable; without them
+    * the per-series μ/σ are a key-sized aggregate broadcast back onto the
+    * big side (full-series retrospective mode — NOT causal, so
+    * deliberately not streamable) and the same fold reads them. */
   def cusum(
       k: Double = 0.5,
       h: Double = 5.0,
@@ -347,42 +345,41 @@ final class Ta(private val df: DataFrame) {
       sd: Option[Double] = None
   ): DataFrame = run("cusum", src)(Seq("k" -> k, "h" -> h) ++ mu.map("mu" -> _) ++ sd.map("sd" -> _): _*)
 
-  /** Ehlers 2-pole super smoother — see rec.Ssf. */
+  /** Ehlers 2-pole super smoother — fold RecFolds.SsfFold. */
   def ssf(n: Int = 10, src: String = "close"): DataFrame = run("ssf", src)("length" -> n)
 
-  /** Holt-Winter MA — rec.Hwma; round-9 fold (RecFolds.HwmaFold). */
+  /** Holt-Winter MA — fold RecFolds.HwmaFold. */
   def hwma(na: Double = 0.2, nb: Double = 0.1, nc: Double = 0.1, src: String = "close"): DataFrame =
     run("hwma", src)("na" -> na, "nb" -> nb, "nc" -> nc)
 
   /** Fisher transform (reference momentum/fisher.py): rolling position in
-    * the HH/LL range feeds the v/fisher recursion (rec.Fisher). */
+    * the HH/LL range feeds the v/fisher recursion (RecFolds.FisherFold). */
   def fisher(n: Int = 9): DataFrame = run("fisher")("length" -> n)
 
-  /** TD Sequential setup counts — see rec.TdSeq. */
+  /** TD Sequential setup counts — struct fold RecFolds.TdSeqFold. */
   def tdSeq: DataFrame = run("td_seq")()
 
   /** QQE (reference momentum/qqe.py): RSI → ema smooth → double-Wilder
-    * DAR bands → trailing state machine (rec.Qqe). */
+    * DAR bands → trailing state machine (RecFolds.QqeFold). */
   def qqe(n: Int = 14, smooth: Int = 5, factor: Double = 4.236): DataFrame =
     run("qqe")("length" -> n, "smooth" -> smooth, "factor" -> factor)
 
-  /** Jurik RSX — see rec.Rsx. */
+  /** Jurik RSX — fold RecFolds.RsxFold. */
   def rsx(n: Int = 14): DataFrame = run("rsx")("length" -> n)
 
-  /** Ehlers Even Better SineWave — rec.Ebsw; round-9 fold
-    * (RecFolds.EbswFold). */
+  /** Ehlers Even Better SineWave — fold RecFolds.EbswFold. */
   def ebsw(n: Int = 40, bars: Int = 10): DataFrame = run("ebsw")("length" -> n, "bars" -> bars)
 
-  /** Holt-Winter channel — rec.Hwc; round-9 struct fold
-    * (RecFolds.HwcFold). */
+  /** Holt-Winter channel — struct fold RecFolds.HwcFold. */
   def hwc(na: Double = 0.2, nb: Double = 0.1, nc: Double = 0.1, nd: Double = 0.1, k: Double = 1.0): DataFrame =
     run("hwc")("na" -> na, "nb" -> nb, "nc" -> nc, "nd" -> nd, "k" -> k)
 
-  /** Jurik MA — see rec.Jma (rows-only oracle; ring-buffer state). */
+  /** Jurik MA — fold RecFolds.JmaFold (its 11/65-entry volatility rings
+    * as flat buffer slots; rows-only oracle). */
   def jma(n: Int = 7, phase: Double = 0.0): DataFrame = run("jma")("length" -> n, "phase" -> phase)
 
   /** Gann HiLo activator (reference overlap/hilo.py): sma(high,hn) /
-    * sma(low,ln) bands + trend state machine (rec.Hilo). */
+    * sma(low,ln) bands + trend state machine (RecFolds.HiloFold). */
   def hilo(hn: Int = 13, ln: Int = 21): DataFrame = run("hilo")("high_length" -> hn, "low_length" -> ln)
 
   // ============================================== more compositions =====

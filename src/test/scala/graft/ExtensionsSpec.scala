@@ -41,6 +41,7 @@ class ExtensionsSpec extends AnyFunSuite {
         "graft_ha_k", "graft_mcgd_k", "graft_ssf_k", "graft_hwma_k",
         "graft_kalman_k", "graft_ebsw_k", "graft_hwc_k", "graft_td_seq_k", "graft_rsx_k",
         "graft_hilo_k", "graft_fisher_k", "graft_qqe_k",
+        "graft_jma_k", "graft_cusum_k",
         "graft_atr_k", "graft_trix_k", "graft_tsi_k", "graft_adx_k", "graft_kc_k",
         "graft_ema", "graft_rsi", "graft_macd", "graft_dema", "graft_tema",
         "graft_psar", "graft_supertrend",
@@ -125,6 +126,8 @@ class ExtensionsSpec extends AnyFunSuite {
       "graft_hilo_k(close, high, low) OVER (PARTITION BY series_id ORDER BY ts ROWS UNBOUNDED PRECEDING)",
       "graft_fisher_k(close) OVER (PARTITION BY series_id ORDER BY ts ROWS UNBOUNDED PRECEDING)",
       "graft_qqe_k(close, volume) OVER (PARTITION BY series_id ORDER BY ts ROWS UNBOUNDED PRECEDING)",
+      "graft_jma_k(close, 7, 0.0) OVER (PARTITION BY series_id ORDER BY ts ROWS UNBOUNDED PRECEDING)",
+      "graft_cusum_k(close, 100.0, 10.0, 0.5, 5.0) OVER (PARTITION BY series_id ORDER BY ts ROWS UNBOUNDED PRECEDING)",
       "graft_bbands(close, 3, 2.0).bbm", "graft_stoch(high, low, close, 3, 2, 2).stoch_k",
       "graft_willr(high, low, close, 3)", "graft_mom(close, 3)", "graft_slope(close, 3)",
       "graft_midpoint(close, 3)", "graft_midprice(high, low, 3)",

@@ -180,11 +180,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("full REC-kind strategy batch plans ONE Exchange total (jma's collapses)") {
-    // every O(1)-state REC kind folds (round 9), and the one remaining
-    // kernel (jma, ring buffers) repartitions on the SAME key the
-    // window Exchange already established — Catalyst elides the
-    // redundant shuffle, so a batch of ALL fifteen formerly-kernel
-    // kinds plans a single Exchange end-to-end
+    // every REC kind is a window fold (jma's rings included), so a
+    // batch of all fifteen shares the one (series_id, ts) window
+    // Exchange end-to-end
     import graft.ta.{registry, IndicatorSpec, Strategy}
     val out = registry.strategy(
       synthetic.repartition(col("series_id")),
@@ -233,12 +231,9 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("every window-class registry indicator in ONE strategy = one shuffle") {
     import graft.ta.{registry, IndicatorSpec, Strategy}
-    // REC kernels repartition internally (mapPartitions state machines);
-    // everything else must share the single (series_id, ts) exchange.
-    // Round 9 moved every O(1)-state kernel to RecFolds window folds —
-    // including the staged-input machines (hilo/fisher/qqe, whose
-    // windowed inputs stay as staged columns). Only the genuinely
-    // ring-buffered jma and cusum (broadcast stats join) repartition.
+    // every kind must share the single (series_id, ts) exchange. The
+    // list below was the kernel-run kinds; both are window folds now,
+    // and retrospective cusum still adds its broadcast stats join.
     val kernelKinds = Set(
       "jma",
       "cusum" // adds a broadcast stats join — not a window op

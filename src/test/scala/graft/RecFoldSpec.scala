@@ -1,19 +1,19 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
-import graft.ta.{rec, Ta}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
+import graft.{RecReference => rec}
+import graft.ta.{registry, IndicatorSpec, StrategyCompiler}
 import graft.ta.Ta._
 
-/** Round-9 REC fold lowering: the struct window folds
-  * (functions.RecFolds) must equal the mapPartitions kernel spellings
-  * (rec.Psar, rec.Supertrend) ROW-FOR-ROW at full double precision,
-  * across series boundaries (kernel reset ≡ window partition) and
-  * through both reversal branches. The kernels are the retained spec
-  * references — this proof is what lets the accessor and the strategy
-  * compiler run the folds (one Exchange shared with the W class)
-  * while streaming keeps the kernels.
+/** The REC window folds (functions.RecFolds) must equal their reference
+  * kernels (RecReference) ROW-FOR-ROW at full double precision, across
+  * series boundaries (kernel reset ≡ window partition) and through every
+  * branch of their state machines. This proof is what lets every route —
+  * the accessor, the strategy compiler and streaming — run the folds
+  * only.
   */
 class RecFoldSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -205,5 +205,119 @@ class RecFoldSpec extends AnyFunSuite {
       .select("series_id", "ts", "psar_long", "supert_7")
     val cols = Seq("psar_long", "supert_7")
     assertSame(collectCols(viaTa, cols), collectCols(out, cols), cols)
+  }
+
+  // ---- every REC kind against its reference on awkward inputs -------
+
+  private def longF(name: String) = StructField(name, LongType, nullable = true)
+
+  /** A REC spec, the columns it adds, and its reference kernel with the
+    * inputs that kernel reads staged onto the frame. */
+  private case class Ref(spec: IndicatorSpec, outs: Seq[StructField], stage: DataFrame => DataFrame,
+      make: () => rec.Kernel)
+
+  /** The lowering's own staged inputs (every level but the fold's struct
+    * and its fields), renamed to the columns the kernel reads. */
+  private def lowered(spec: IndicatorSpec, names: (String, String)*)(df: DataFrame): DataFrame = {
+    val cp = StrategyCompiler.compile(spec).get
+    val staged = StrategyCompiler.runAll(df, Seq(StrategyCompiler.ColPlan(cp.levels.dropRight(2), Nil)))
+    names.foldLeft(staged) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
+  }
+
+  private val cusumOuts = Seq(dbl("cusum_pos"), dbl("cusum_neg"), longF("cusum_alarm"))
+
+  /** Retrospective cusum's reference input: the per-series μ/σ (6 dp). */
+  private def cusumStats(df: DataFrame): DataFrame =
+    df.join(
+      broadcast(df.groupBy("series_id")
+        .agg(round(avg(col("close")), 6).as("__mu"), round(stddev_samp(col("close")), 6).as("__sd"))),
+      Seq("series_id"), "left")
+
+  private val jmaRefs = Seq(
+    Ref(IndicatorSpec("jma"), Seq(dbl("jma_7")), identity, () => new rec.Jma()),
+    Ref(IndicatorSpec("jma", Map("length" -> 14, "phase" -> 50.0)), Seq(dbl("jma_14")), identity,
+      () => new rec.Jma(14, 50.0)))
+
+  private val cusumRefs = Seq(
+    Ref(IndicatorSpec("cusum", Map("mu" -> 100.0, "sd" -> 10.0, "k" -> 0.25, "h" -> 3.0)), cusumOuts, identity,
+      () => new rec.Cusum(0.25, 3.0, "close", Some((100.0, 10.0)))),
+    Ref(IndicatorSpec("cusum"), cusumOuts, cusumStats, () => new rec.Cusum()))
+
+  private def allRefs: Seq[Ref] = {
+    val qqe = IndicatorSpec("qqe", Map("length" -> 6, "smooth" -> 3))
+    Seq(
+      Ref(IndicatorSpec("psar"), Seq(dbl("psar_long"), dbl("psar_short"), dbl("psar_af"), intF("psar_reversal")),
+        identity, () => new rec.Psar()),
+      Ref(IndicatorSpec("supertrend"), Seq(dbl("supert_7"), intF("supertd_7"), dbl("supertl_7"), dbl("superts_7")),
+        identity, () => new rec.Supertrend()),
+      Ref(IndicatorSpec("ha"), Seq("ha_open", "ha_high", "ha_low", "ha_close").map(dbl), identity,
+        () => new rec.HeikinAshi),
+      Ref(IndicatorSpec("mcgd"), Seq(dbl("mcgd_10")), identity, () => new rec.Mcgd()),
+      Ref(IndicatorSpec("ssf"), Seq(dbl("ssf_10")), identity, () => new rec.Ssf()),
+      Ref(IndicatorSpec("hwma"), Seq(dbl("hwma")), identity, () => new rec.Hwma()),
+      Ref(IndicatorSpec("kalman"), Seq(dbl("kf"), dbl("kf_gain")), identity, () => new rec.Kalman()),
+      Ref(IndicatorSpec("ebsw", Map("length" -> 20)), Seq(dbl("ebsw_20")), identity, () => new rec.Ebsw(20)),
+      Ref(IndicatorSpec("hwc"), Seq("hwc_mid", "hwc_upper", "hwc_lower").map(dbl), identity, () => new rec.Hwc()),
+      Ref(IndicatorSpec("td_seq"), Seq(longF("td_seq_up"), longF("td_seq_dn")),
+        _.withColumn("__c4", graft.ta.prim.shift(col("close"), 4)), () => new rec.TdSeq),
+      Ref(IndicatorSpec("rsx", Map("length" -> 10)), Seq(dbl("rsx_10")), identity, () => new rec.Rsx(10)),
+      Ref(IndicatorSpec("hilo"), Seq("hilo", "hilo_long", "hilo_short").map(dbl),
+        lowered(IndicatorSpec("hilo"), "__hilo_mh_13" -> "__mh", "__hilo_ml_21" -> "__ml"), () => new rec.Hilo),
+      Ref(IndicatorSpec("fisher"), Seq(dbl("fisher_9"), dbl("fisher_signal_9")),
+        lowered(IndicatorSpec("fisher"), "__fisher_pos_9" -> "__pos"), () => new rec.Fisher),
+      Ref(qqe, Seq(dbl("qqe_6"), intF("qqe_trend_6"), dbl("qqe_long_6"), dbl("qqe_short_6")),
+        lowered(qqe, "__qqe_rsima_6_3" -> "__rsima", "__qqe_dar_6_3_4_236" -> "__dar"), () => new rec.Qqe)
+    ) ++ jmaRefs ++ cusumRefs
+  }
+
+  /** Rows as a multiset of (series_id, ts, outputs), doubles by their
+    * bits (NaN equals NaN, -0.0 does not equal 0.0): duplicate-ts rows
+    * are exact copies, so their order among themselves cannot show. */
+  private def exactRows(df: DataFrame, outs: Seq[String]): Map[Seq[Any], Int] =
+    df.select((Seq("series_id", "ts") ++ outs).map(c => col(c)): _*).collect().toSeq
+      .map(r => (0 until r.length).map(i => if (r.isNullAt(i)) None else r.get(i) match {
+        case d: Double => Some(java.lang.Double.doubleToLongBits(d))
+        case v => Some(v)
+      }): Seq[Any])
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** Disagreements of `registry(df, spec)` with the reference kernel. */
+  private def foldVsReference(r: Ref, df: DataFrame, frame: String): Option[String] = {
+    val outs = r.outs.map(_.name)
+    val fold = exactRows(registry(df, r.spec), outs)
+    val ref = exactRows(rec.perSeries(r.stage(df), r.outs)(r.make), outs)
+    if (fold == ref) None
+    else Some(s"${r.spec.kind}${r.spec.params} on $frame: fold-only ${(fold.keySet diff ref.keySet).take(2)} " +
+      s"vs reference-only ${(ref.keySet diff fold.keySet).take(2)}")
+  }
+
+  test("jma and cusum folds == their kernels, bit-exact: defaults, length 14 phase 50, both cusum modes") {
+    Graft.init(spark)
+    val awk = StrategySpec.awkward(Graft.bars(spark, TestSpark.sfDir))
+    val failures = for {
+      r <- jmaRefs ++ cusumRefs
+      (name, df) <- Seq("bars" -> bars, "nullClose" -> nullClose, "awkward" -> awk)
+      f <- foldVsReference(r, df, name)
+    } yield f
+    assert(failures.isEmpty, failures.mkString("\n"))
+    // the fixture exercises alarms (and the reset) in both modes
+    cusumRefs.foreach { r =>
+      val alarms = registry(bars, r.spec).where(col("cusum_alarm") === 1).count()
+      assert(alarms > 0, s"fixture too tame: no cusum alarm for ${r.spec.params}")
+    }
+  }
+
+  test("every REC fold == its reference kernel, bit-exact, on the awkward frame") {
+    Graft.init(spark)
+    // the "nulls" series: these references read raw prices without a null
+    // check, so they cannot run over a null price at all
+    val rawInputs = Set("psar", "supertrend", "ha", "ebsw", "hwc", "td_seq", "rsx", "hilo")
+    val awk = StrategySpec.awkward(Graft.bars(spark, TestSpark.sfDir)).cache()
+    val failures = try allRefs.flatMap { r =>
+      val df = if (rawInputs(r.spec.kind)) awk.where(col("series_id") =!= "nulls") else awk
+      foldVsReference(r, df, "awkward")
+    } finally awk.unpersist(blocking = true)
+    assert(allRefs.map(_.spec.kind).distinct.size == 16)
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

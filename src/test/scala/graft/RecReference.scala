@@ -1,31 +1,18 @@
-package graft.ta
+package graft
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** REC-class kernels (SURVEY.md §2.A REC / §4.3 tier 4): non-linear or
-  * branching per-series recursions as single-pass state machines.
+/** The REC-class reference kernels (SURVEY.md §2.A REC / §4.3 tier 4):
+  * each per-series recursion as a single-pass state machine over
+  * `Row`s, kept as the bit-identity references the window folds
+  * (functions.RecFolds) are proven against in RecFoldSpec. Production
+  * runs the folds only.
   *
-  * Since round 9 every O(1)-state kernel here ALSO exists as a
-  * DeclarativeAggregate window fold (functions.RecFolds /
-  * SeededComposites) and the batch accessor/strategy paths run the
-  * folds; these kernels remain as (1) the STREAMING twins —
-  * kernelBatchStream replays them tick-by-tick, (2) the bit-identity
-  * spec references the folds are proven against (RecFoldSpec — the
-  * emaStaged pattern), and (3) the batch path for the kinds a fold
-  * cannot express: jma (11/65-entry ring buffers) and retrospective
-  * cusum (whole-series stats join).
-  *
-  * Execution shape: `repartition(series_id)` + `sortWithinPartitions
-  * (series_id, ts)` + `mapPartitions` — ONE shuffle (same key as every
-  * window indicator, so Catalyst elides it entirely when composed after
-  * the window Exchange — PlanShapeSpec), then a single streaming pass
-  * per partition with O(1) state per key. At 100 TB this is I/O-bound
-  * sequential scan per series; the inherently serial dependency chain is
-  * documented in SURVEY §4.3 (psar-class recursions cannot be
-  * prefix-scanned — true for the folds as well, which run inside the
-  * same sorted window pass).
+  * [[perSeries]] runs a kernel the way the engine once did:
+  * `repartition(series_id)` + `sortWithinPartitions(series_id, ts)` +
+  * `mapPartitions`, the kernel reset at every series boundary.
   *
   * Kernels read input fields by index resolved once per partition
   * (`init`), emit a fixed-arity Array[Any] per row, and are reset at every
@@ -33,9 +20,7 @@ import org.apache.spark.sql.types._
   * generally emits null outputs and leaves state unchanged (pandas NaN
   * semantics), handled per kernel.
   */
-object rec {
-
-  trait Kernel extends Serializable {
+object RecReference { trait Kernel extends Serializable {
     /** Resolve input column indexes once per partition. */
     def init(schema: StructType): Unit
     /** New series: clear all state. */
@@ -66,40 +51,6 @@ object rec {
             started = true
           }
           Row.fromSeq(row.toSeq ++ kernel.update(row))
-        }
-      }(enc)
-  }
-
-  /** Run SEVERAL kernels in ONE repartition + sort + mapPartitions pass,
-    * appending each kernel's outputs in order. A Strategy with k REC
-    * indicators pays one shuffle and one sequential scan instead of k —
-    * the kernels are independent per row, only their per-series state is
-    * separate. Used by the Strategy batch compiler. */
-  def perSeriesBatch(df: DataFrame, parts: Seq[(Seq[StructField], () => Kernel)]): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ parts.flatMap(_._1))
-    val keyIdx = inSchema.fieldIndex("series_id")
-    val enc = Encoders.row(outSchema)
-    val makes = parts.map(_._2)
-    df.repartition(col("series_id"))
-      .sortWithinPartitions("series_id", "ts")
-      .mapPartitions { it =>
-        var kernels: Array[Kernel] = null
-        var curKey: Any = null
-        var started = false
-        it.map { row =>
-          val k = row.get(keyIdx)
-          if (!started || k != curKey) {
-            kernels = makes.map(_()).toArray
-            var j = 0
-            while (j < kernels.length) { kernels(j).init(inSchema); kernels(j).reset(); j += 1 }
-            curKey = k
-            started = true
-          }
-          val outs = scala.collection.mutable.ArrayBuffer[Any]()
-          var j = 0
-          while (j < kernels.length) { outs ++= kernels(j).update(row); j += 1 }
-          Row.fromSeq(row.toSeq ++ outs)
         }
       }(enc)
   }

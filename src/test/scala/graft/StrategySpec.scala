@@ -145,15 +145,11 @@ class StrategySpec extends AnyFunSuite {
     * prices as primitive doubles, so no stream can deliver a null ("nulls"). */
   private val notStreamed = Set("dups", "nulls")
 
-  private val barTickSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "series_id STRING, ts BIGINT, open DOUBLE, high DOUBLE, low DOUBLE, close DOUBLE, volume DOUBLE")
-
   /** The stream route: every tick of a series folded in `ts` order through
-    * the stage and kernel `windowStream`/`recStream` build, as
-    * kernelBatchStream does; rows as (series_id, ts, outputs in name order). */
-  private def streamRows(sk: graft.streaming.StreamingTa.StreamKernel, df: DataFrame): (Seq[String], Seq[Row]) = {
+    * the stage `windowStream` builds, as kernelBatchStream does; rows as
+    * (series_id, ts, outputs in name order). */
+  private def streamRows(sk: graft.streaming.StreamingTa.StreamTwin, df: DataFrame): (Seq[String], Seq[Row]) = {
     import graft.streaming.StreamingTa.BarTick
-    import org.apache.spark.sql.types.StructType
     val ticks = df.where(!col("series_id").isin(notStreamed.toSeq: _*))
       .select(col("series_id").cast("string"), unix_date(col("ts")).cast("long"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
@@ -163,11 +159,8 @@ class StrategySpec extends AnyFunSuite {
     val order = names.zipWithIndex.sortBy(_._1).map(_._2)
     val rows = ticks.groupBy(_.series_id).values.toSeq.flatMap { ts0 =>
       val stg = sk.stage()
-      val es = StructType(barTickSchema.fields ++ stg.fields)
-      val kern = sk.make(); kern.init(es); kern.reset()
       ts0.sortBy(_.ts).map { t =>
-        val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
-        val vals = kern.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(base ++ stg.update(t), es))
+        val vals = stg.update(t)
         Row.fromSeq(Seq(t.series_id, t.ts) ++ order.map(vals(_)))
       }
     }
@@ -177,7 +170,7 @@ class StrategySpec extends AnyFunSuite {
   /** The stream route against the accessor's outcome: the same added
     * columns, and per streamed series the same rows; returns the
     * disagreements, naming the series (one pathology each). */
-  private def streamDifference(sk: graft.streaming.StreamingTa.StreamKernel, df: DataFrame, acc: Outcome): Seq[String] =
+  private def streamDifference(sk: graft.streaming.StreamingTa.StreamTwin, df: DataFrame, acc: Outcome): Seq[String] =
     acc.toOption.toSeq.flatMap { case (cols, rows) =>
       scala.util.Try(streamRows(sk, df)).toEither match {
         case Left(e) => Seq(s"stream failed: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
@@ -208,7 +201,7 @@ class StrategySpec extends AnyFunSuite {
 
   test("compiled lowering equals the builder for every lowerable kind") {
     // four routes per kind — the accessor, registry(df, spec), a one-spec
-    // Strategy batch and, for every kind windowStream/recStream accepts,
+    // Strategy batch and, for every kind windowStream accepts,
     // the stream fold — on the awkward frame (it carries the plain fixture
     // as its "ALL" series) and an empty frame
     assert(accessor.keySet == registry.indicators.toSet, "accessor table out of step with the registry")
@@ -227,7 +220,7 @@ class StrategySpec extends AnyFunSuite {
         "registry" -> outcome(registry(df, spec)),
         "batch" -> outcome(registry.strategy(df, Strategy("one", Seq(spec))))
       ).flatMap { case (route, out) => difference(out, a).map(d => s"$what: $route vs accessor: $d") } ++
-        StreamingTa.windowStream(spec).orElse(StreamingTa.recStream(spec)).toSeq
+        StreamingTa.windowStream(spec).toSeq
           .flatMap(streamDifference(_, df, a)).map(d => s"$what: stream vs accessor: $d")
     } yield msg
     finally aw.unpersist(blocking = true) // CacheRegistrySpec asserts nothing stays pinned
@@ -254,11 +247,9 @@ class StrategySpec extends AnyFunSuite {
     )
     // fresh lambda-variable ids differ between two builds of one expression
     def temps(spec: IndicatorSpec): Map[String, String] =
-      StrategyCompiler.compile(spec).map(cp => (cp.levels, cp.temps))
-        .orElse(StrategyCompiler.compileRec(spec).map(rp => (rp.staging, rp.temps)))
-        .fold(Map.empty[String, String]) { case (levels, ts) =>
-          levels.flatten.collect { case (n, c) if ts.contains(n) => n -> c.toString.replaceAll("\\b([xy])_\\d+\\b", "$1") }.toMap
-        }
+      StrategyCompiler.compile(spec).fold(Map.empty[String, String]) { cp =>
+        cp.levels.flatten.collect { case (n, c) if cp.temps.contains(n) => n -> c.toString.replaceAll("\\b([xy])_\\d+\\b", "$1") }.toMap
+      }
     val base = Map[String, Any]("mu" -> 0.0, "sd" -> 1.0) // cusum lowers only with a reference
     val clashes = for {
       kind <- registry.indicators
@@ -306,7 +297,7 @@ class StrategySpec extends AnyFunSuite {
       // adx writes dmp_14/dmn_14 one level deeper than dm does
       Seq(IndicatorSpec("adx", Map("length" -> 14)), IndicatorSpec("dm", Map("length" -> 14))),
       Seq(IndicatorSpec("dm", Map("length" -> 14)), IndicatorSpec("adx", Map("length" -> 14))),
-      // kernel outputs: same names, different parameters
+      // REC fold outputs: same names, different parameters
       Seq(IndicatorSpec("cusum", Map("mu" -> 40.0, "sd" -> 30.0)), IndicatorSpec("cusum", Map("mu" -> 60.0, "sd" -> 10.0, "h" -> 2.0))),
       Seq(IndicatorSpec("jma", Map("length" -> 7, "phase" -> 0.0)), IndicatorSpec("jma", Map("length" -> 7, "phase" -> 50.0)))
     )
@@ -315,7 +306,7 @@ class StrategySpec extends AnyFunSuite {
     import graft.ta.StrategyCompiler.{runAll, ColPlan}
     val deep = ColPlan(Seq(Seq("__d" -> lit(0.0)), Seq("x" -> (col("__d") + 1.0))), Seq("__d"))
     val shallow = ColPlan(Seq(Seq("x" -> lit(2.0))), Nil)
-    def x(plans: ColPlan*) = runAll(bars, plans, Nil).select("x").distinct().collect().map(_.getDouble(0)).toSeq
+    def x(plans: ColPlan*) = runAll(bars, plans).select("x").distinct().collect().map(_.getDouble(0)).toSeq
     assert(x(deep, shallow) == Seq(2.0) && x(shallow, deep) == Seq(1.0), "last plan must win whatever its depth")
   }
 

@@ -6,7 +6,7 @@ import graft.ta.{registry, IndicatorSpec}
 
 /** The streaming coverage CONTRACT (round-10 verdict item #3): which of
   * the registry kinds stream is an asserted list, not archaeology. The
-  * set is computed from the live dispatchers (windowStream/recStream),
+  * set is computed from the live dispatcher (windowStream),
   * so this spec fails when
   *  - a new registry kind silently has no streaming twin (missing), or
   *  - a new stream path forgets to update the declared list (undeclared).
@@ -79,8 +79,8 @@ class StreamingCoverageSpec extends AnyFunSuite {
       val spec =
         if (k == "cusum") IndicatorSpec(k, Map("mu" -> 0.0, "sd" -> 1.0))
         else IndicatorSpec(k)
-      val sk = StreamingTa.windowStream(spec).orElse(StreamingTa.recStream(spec))
-      assert(sk.isDefined, s"$k declared streamable but neither dispatcher takes it")
+      val sk = StreamingTa.windowStream(spec)
+      assert(sk.isDefined, s"$k declared streamable but the dispatcher does not take it")
       assert(sk.get.outs.nonEmpty, s"$k streams but declares no output fields")
     }
   }

@@ -6,7 +6,8 @@ import graft.streaming.StreamingTa
 import graft.ta.Ta._
 import java.nio.file.Files
 
-/** Streaming REC kernels must equal the batch mapPartitions pass. */
+/** Streaming stages of the REC folds (and the window kinds) must equal the
+  * batch route. */
 class StreamingKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -36,7 +37,7 @@ class StreamingKernelSpec extends AnyFunSuite {
       .as[StreamingTa.BarTick]
 
     val q = StreamingTa
-      .kernelStream(stream, () => new graft.ta.rec.Psar())
+      .kernelBatchStream(stream, Seq(StreamingTa.windowStream(graft.ta.IndicatorSpec("psar")).get))
       .writeStream
       .format("memory")
       .queryName("psar_stream")
@@ -48,9 +49,9 @@ class StreamingKernelSpec extends AnyFunSuite {
     def r6(v: Option[Double]) = v.map(x => math.rint(x * 1e6) / 1e6)
     val streamed = spark
       .table("psar_stream")
-      .as[StreamingTa.KernelOut]
       .collect()
-      .map(k => k.ts -> k.values.take(3).map(r6))
+      .map(k => k.getAs[Long]("ts") -> Seq("psar_long", "psar_short", "psar_af").map(c0 =>
+        r6(Option(k.getAs[Any](c0)).map(_.asInstanceOf[Double]))))
       .toMap
 
     val batch = bars.ta.psar().orderBy("ts").collect()
@@ -111,7 +112,7 @@ class StreamingKernelSpec extends AnyFunSuite {
       // ride as literals in both the batch lowering and the stream stage)
       IndicatorSpec("cusum", Map("mu" -> 100.0, "sd" -> 10.0, "k" -> 0.25, "h" -> 3.0))
     )
-    val sks = specs14.map(s => StreamingTa.recStream(s).getOrElse(fail(s"no recStream for ${s.kind}")))
+    val sks = specs14.map(s => StreamingTa.windowStream(s).getOrElse(fail(s"no windowStream for ${s.kind}")))
 
     val q = StreamingTa
       .kernelBatchStream(stream, sks)
@@ -132,9 +133,11 @@ class StreamingKernelSpec extends AnyFunSuite {
     val streamed = spark.table("k14_stream").collect().map(r => r.getAs[Long]("ts") -> r).toMap
     assert(streamed.size == ticks.length)
 
-    specs14.foreach { spec =>
-      val (stagefn, outs, make) = registry.recKernel(spec).get
-      val batch = graft.ta.rec.perSeries(stagefn(bars), outs)(make).orderBy("ts").collect()
+    // the batch side is the registry route; fold ≡ reference kernel is
+    // pinned bit-exactly in RecFoldSpec
+    specs14.zip(sks).foreach { case (spec, sk) =>
+      val outs = sk.outs
+      val batch = registry(bars, spec).orderBy("ts").collect()
       batch.foreach { br =>
         val sr = streamed(br.getAs[Long]("ts"))
         outs.foreach { f =>
@@ -152,8 +155,8 @@ class StreamingKernelSpec extends AnyFunSuite {
   test("W-class + EW-fold window stream equals batch for the top rolling kinds") {
     // round-5 coverage: sma/wma/stdev/zscore/mom/roc/midpoint/midprice/
     // willr/linreg through the SAME kernelBatchStream pass (a stepped
-    // lowering + pass-through kernel), alongside a REC kernel to prove the
-    // two families compose in one stateful pass. Round 9 adds ema/rsi
+    // lowering each), alongside a REC fold to prove the two families
+    // compose in one stateful pass. Round 9 adds ema/rsi
     // (the SeededComposites fold kernels EmaSeeded/RsiSeeded stepped
     // one tick at a time): the batch reference below builds
     // them through the registry, i.e. the FOLD accessor path, so
@@ -212,7 +215,7 @@ class StreamingKernelSpec extends AnyFunSuite {
       IndicatorSpec("kc", Map("length" -> 20, "scalar" -> 2.0))
     )
     val sks = wSpecs.map(s => StreamingTa.windowStream(s).getOrElse(fail(s"no windowStream for ${s.kind}"))) :+
-      StreamingTa.recStream(IndicatorSpec("ssf", Map("length" -> 10))).get
+      StreamingTa.windowStream(IndicatorSpec("ssf", Map("length" -> 10))).get
 
     val q = StreamingTa
       .kernelBatchStream(stream, sks)
@@ -232,7 +235,7 @@ class StreamingKernelSpec extends AnyFunSuite {
     val streamed = spark.table("w10_stream").collect().map(r => r.getAs[Long]("ts") -> r).toMap
     assert(streamed.size == ticks.length)
 
-    // batch reference: the df.ta.* builder per kind (+ the ssf kernel)
+    // batch reference: the df.ta.* builder per kind
     val batch = wSpecs
       .foldLeft(bars)((d, s) => registry(d, s))
       .orderBy("ts")

@@ -65,7 +65,7 @@ class StreamingLateTickSpec extends AnyFunSuite {
 
     val srcDir = writeStraddled(ticks, lateIdx)
     val sks = specs.map(s => StreamingTa.windowStream(s).get) :+
-      StreamingTa.recStream(IndicatorSpec("psar")).get
+      StreamingTa.windowStream(IndicatorSpec("psar")).get
     val acc = spark.sparkContext.longAccumulator("late_test_drop")
 
     val q = StreamingTa
@@ -92,9 +92,8 @@ class StreamingLateTickSpec extends AnyFunSuite {
     // including all rows AFTER the drop (state carried forward uncorrupted)
     val batchRef = specs
       .foldLeft(bars.where(col("ts") =!= lit(lateTs)))((d, s) => registry(d, s))
-    val (stagefn, psarOuts, make) = registry.recKernel(IndicatorSpec("psar")).get
-    val psarRef = graft.ta.rec
-      .perSeries(stagefn(bars.where(col("ts") =!= lit(lateTs))), psarOuts)(make)
+    val psarOuts = sks.last.outs
+    val psarRef = registry(bars.where(col("ts") =!= lit(lateTs)), IndicatorSpec("psar"))
       .select(col("ts").as("pts") +: psarOuts.map(f => col(f.name)): _*)
     val outCols = sks.flatMap(_.outs.map(_.name))
     val refRows = batchRef.join(psarRef, col("ts") === col("pts")).collect()
@@ -161,7 +160,7 @@ class StreamingLateTickSpec extends AnyFunSuite {
     val sks = Seq(
       StreamingTa.windowStream(IndicatorSpec("ema", Map("length" -> 10))).get,
       StreamingTa.windowStream(IndicatorSpec("atr", Map("length" -> 10))).get,
-      StreamingTa.recStream(IndicatorSpec("psar")).get)
+      StreamingTa.windowStream(IndicatorSpec("psar")).get)
     val acc = spark.sparkContext.longAccumulator("late_many_drop")
     val q = StreamingTa
       .kernelBatchStream(ms.toDS(), sks, latePolicy = "drop", lateCounter = Some(acc))
